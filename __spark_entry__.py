@@ -28,21 +28,23 @@ load_all_operators()
 # verification window (~50 queries, taken from the head of ``queries()``)
 # re-records them.
 #
-# r19 (second optimization round): every query whose implementation changed
-# this round goes first so the driver re-records it — the Borůvka round
-# fusion + bounded_loop_frame probe removal + kcore/Δ-stepping checkpoint
-# trims (graph family), the pretrain-funnel budget/shingle fusion, the
-# incremental-dedup decision fusion, and the lazy per-round training
-# checkpoints (k-means/PQ/elbow/power-iteration consumers). All were locally
-# oracle-verified at sf0.01+sf0.001 (several also at sf0.1); the pins make
-# the driver confirm it. The stalest-first tail then drains the oldest
-# record ring as before.
+# Head: the queries whose code paths lost a probe-only option or gained a
+# shared helper — Borůvka without its prune/edge-count switches, the SSSP
+# relax-merge shared with Δ-stepping, the set-similarity kernels without
+# n_blocks, and round_half_up's isfinite guard (ml_gmm_em). All were locally
+# oracle-verified at sf0.01+sf0.001. Then the r19 pins (Borůvka round
+# fusion, kcore/Δ-stepping checkpoint trims, the pretrain-funnel fusion,
+# the incremental-dedup decision fusion, the lazy per-round training
+# checkpoints); the stalest-first tail then drains the oldest record ring.
 _REVERIFY_FIRST: list[str] = [
     "graph_mst",
+    "graph_sssp_weighted",
+    "graph_sssp_delta",
+    "dedup_containment",
+    "dedup_ngram",
+    "ml_gmm_em",
     "graph_kcore",
     "graph_coreness",
-    "graph_sssp_delta",
-    "graph_sssp_weighted",
     "pipeline_pretrain_report",
     "dedup_incremental",
     "vec_kmeans_lloyd",

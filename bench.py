@@ -29,12 +29,10 @@ only the JSON line.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import re
 import sys
-import time
 
 
 HEADLINE = [
@@ -105,15 +103,11 @@ def main() -> None:
         df = REGISTRY[name].fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
 
-    def collect_garbage() -> None:
-        gc.collect()  # drop Python-side DataFrame refs → ContextCleaner frees blocks
-        spark.sparkContext._jvm.System.gc()
-
     # the warm-up + interleaved timed passes live in benchlib so this
     # harness and tools/gen_baseline_bands cannot drift apart (the
     # synthetic fixpoint rows' inputs are built there too, outside the
-    # timed runs)
-    from spark_ml_helper_spark.benchlib import make_runners, run_interleaved
+    # timed runs); the solo instruments below share benchlib.warm_runs
+    from spark_ml_helper_spark.benchlib import make_runners, run_interleaved, warm_runs
 
     all_runs = run_interleaved(
         spark, make_runners(spark, HEADLINE, materialize), HEADLINE, 2
@@ -144,14 +138,7 @@ def main() -> None:
     def probe_only() -> None:
         ivfpq_probe(index, probe_queries).write.format("noop").mode("overwrite").save()
 
-    probe_only()  # warm-up
-    best = float("inf")
-    for _ in range(2):
-        collect_garbage()
-        t0 = time.perf_counter()
-        probe_only()
-        best = min(best, time.perf_counter() - t0)
-    probe_time = round(best, 4)
+    probe_time = round(min(warm_runs(spark, probe_only)[0]), 4)
 
     # SemDeDup apply-only instrument (round-12, same pattern): time the
     # ONLINE pair stage against a pre-trained cell assignment — the
@@ -166,14 +153,7 @@ def main() -> None:
     def semdedup_only() -> None:
         semdedup_apply(km_final).write.format("noop").mode("overwrite").save()
 
-    semdedup_only()  # warm-up
-    best = float("inf")
-    for _ in range(2):
-        collect_garbage()
-        t0 = time.perf_counter()
-        semdedup_only()
-        best = min(best, time.perf_counter() - t0)
-    semdedup_time = round(best, 4)
+    semdedup_time = round(min(warm_runs(spark, semdedup_only)[0]), 4)
 
     # Per-round fixpoint instruments (round-13, judge item 2; extends
     # the round-12 Δ-stepping instrument to every graph fixpoint
@@ -210,14 +190,8 @@ def main() -> None:
 
     def time_fixpoint(run):
         """run() executes the fixpoint, returns its round count."""
-        rounds = run()  # warm-up: JIT, plan cache (inputs pre-built)
-        best = float("inf")
-        for _ in range(2):
-            collect_garbage()
-            t0 = time.perf_counter()
-            rounds = run()
-            best = min(best, time.perf_counter() - t0)
-        return round(best / max(rounds, 1), 4), rounds
+        times, rounds = warm_runs(spark, run)  # inputs pre-built
+        return round(min(times) / max(rounds, 1), 4), rounds
 
     edges, seeds, n_nodes = sssp_inputs(spark, inst_dir)
     seeds = seeds.localCheckpoint(eager=True)

@@ -44,6 +44,21 @@ def collect_garbage(spark) -> None:
     spark.sparkContext._jvm.System.gc()
 
 
+def warm_runs(spark, run, n_runs: int = 2):
+    """One warm-up call of ``run`` (JIT, plan cache, file listing), then
+    ``n_runs`` timed calls with Python+JVM GC before each; returns
+    ``(seconds per timed call, result of the last call)``. The solo
+    timing loop of bench.py's instruments and tools/scale_probe."""
+    out = run()
+    times = []
+    for _ in range(n_runs):
+        collect_garbage(spark)
+        t0 = time.perf_counter()
+        out = run()
+        times.append(time.perf_counter() - t0)
+    return times, out
+
+
 def run_interleaved(spark, runners: dict, order, n_passes: int) -> dict:
     """One warm-up pass (JIT, plan cache, file listing), then
     ``n_passes`` timed round-robin passes; returns {name: [sec/pass]}."""

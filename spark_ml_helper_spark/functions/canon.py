@@ -21,6 +21,7 @@ DuckDB twins (paste into oracle SQL):
 
 from __future__ import annotations
 
+import math
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column
@@ -44,7 +45,7 @@ def round_half_up(x: float, digits: int) -> float:
     round() this replaced propagated them — a diverging gradient fold
     should surface as an inspectable inf/NaN result, not a mid-loop
     crash."""
-    if x != x or x in (float("inf"), float("-inf")):
+    if not math.isfinite(x):
         return x
     q = Decimal(1).scaleb(-digits)
     return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))

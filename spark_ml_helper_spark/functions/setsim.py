@@ -111,9 +111,10 @@ def rep_jaccard_pairs(
     ``counters``: optional dict; when given, records ``n_reps``,
     ``postings`` (exploded prefix rows) and ``candidates`` (pairs
     surviving the prefix+length+positional filters, BEFORE the exact
-    rescore) — the quantities tools/scale_probe_setsim.py charts against
-    n²/2 to evidence the prefix filter's 100 TB claim. Each costs one
-    extra count() action, so production callers leave it None."""
+    rescore) — the quantities ``python -m tools.scale_probe setsim``
+    charts against n²/2 to evidence the prefix filter's 100 TB claim.
+    Each costs one extra count() action, so production callers leave
+    it None."""
     vocab = (
         rep_sets.select(F.explode("elems").alias("elem"))
         .groupBy("elem")
@@ -176,7 +177,7 @@ def rep_jaccard_pairs(
 #: Target rows per matmul block. The block-pair kernel allocates
 #: (rows_a × rows_b) float64 intersection/jaccard matrices, so per-task
 #: memory is ~(BLOCK_TARGET_ROWS² × 8 B) × 2.5 ≈ 320 MB at 4000 — the
-#: executor-memory dial. Round-13 probe find (tools/scale_probe_setsim):
+#: executor-memory dial. Round-13 probe find (tools.scale_probe setsim):
 #: a FIXED n_blocks=4 at 200k distinct contents allocates a 50k×50k
 #: (20 GB) matrix and kills the Arrow worker; block count must scale
 #: with the collapsed rep count.
@@ -191,7 +192,7 @@ def _auto_blocks(n_reps: int) -> int:
     return max(4, -(-n_reps // BLOCK_TARGET_ROWS))
 
 
-def smallvocab_jaccard_pairs(sets: DataFrame, tau: float, out_col: str, n_blocks: int | None = None) -> DataFrame:
+def smallvocab_jaccard_pairs(sets: DataFrame, tau: float, out_col: str) -> DataFrame:
     """Same contract as exact_jaccard_pairs, specialized for a SMALL element
     vocabulary: represent each distinct set as a multi-hot row over the
     ranked vocab, partition sets into blocks, and compute ALL pairwise
@@ -231,8 +232,8 @@ def smallvocab_jaccard_pairs(sets: DataFrame, tau: float, out_col: str, n_blocks
     )
     vdim = vocab.count()  # bounded by assumption; one tiny job
 
-    # ranked is checkpointed — the count is a cheap job, paid only on auto
-    G = n_blocks if n_blocks is not None else _auto_blocks(ranked.count())
+    # ranked is checkpointed — the count is a cheap job
+    G = _auto_blocks(ranked.count())
     blocks = ranked.withColumn("g", (F.col("rep_id") % G).cast("int"))
     spark = sets.sparkSession
 
@@ -313,7 +314,7 @@ def smallvocab_jaccard_pairs(sets: DataFrame, tau: float, out_col: str, n_blocks
     return cross.unionByName(within)
 
 
-def containment_rep_pairs(sets: DataFrame, tau: float, out_col: str, n_blocks: int | None = None):
+def containment_rep_pairs(sets: DataFrame, tau: float, out_col: str):
     """DIRECTED set-containment core: collapse identical sets, then find
     every ordered REPRESENTATIVE pair with C(A→B) = |A∩B| / |A| ≥ tau,
     ra ≠ rb. Returns (rep_pairs, membership): rep_pairs has columns
@@ -358,8 +359,8 @@ def containment_rep_pairs(sets: DataFrame, tau: float, out_col: str, n_blocks: i
     )
     vdim = vocab.count()
 
-    # ranked is checkpointed — the count is a cheap job, paid only on auto
-    G = n_blocks if n_blocks is not None else _auto_blocks(ranked.count())
+    # ranked is checkpointed — the count is a cheap job
+    G = _auto_blocks(ranked.count())
     blocks = ranked.withColumn("g", (F.col("rep_id") % G).cast("int"))
     spark = sets.sparkSession
 
@@ -435,14 +436,14 @@ def containment_rep_pairs(sets: DataFrame, tau: float, out_col: str, n_blocks: i
     return rep_pairs, membership
 
 
-def smallvocab_containment_pairs(sets: DataFrame, tau: float, out_col: str, n_blocks: int | None = None) -> DataFrame:
+def smallvocab_containment_pairs(sets: DataFrame, tau: float, out_col: str) -> DataFrame:
     """Doc-level expansion of containment_rep_pairs: (a_id, b_id,
     <out_col>) for every ORDERED doc pair with C(A→B) ≥ tau, a_id ≠ b_id.
     On a duplicate-heavy corpus this output is quadratic in group sizes
     (it materializes every member × member pair) — prefer consuming
     containment_rep_pairs directly and aggregating at the rep level when
     the downstream question allows it."""
-    rep_pairs, membership = containment_rep_pairs(sets, tau, out_col, n_blocks)
+    rep_pairs, membership = containment_rep_pairs(sets, tau, out_col)
     # directed expansion: every member of ra is contained in every member
     # of rb — ORDER PRESERVED, no least/greatest canonicalization
     cross = (

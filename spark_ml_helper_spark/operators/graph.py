@@ -362,9 +362,10 @@ def fresh_stats_checkpoint(df, eager=True):
     measured on the Borůvka loop: comp stats 5 → 28 → 151 → 818 digits
     in four rounds, and by round 9 the driver spends 60+ s per round
     inside million-digit ``BigInteger.multiplyToomCook3`` calls during
-    planning (jstack-verified; tools/scale_probe_mst.py is the
-    regression probe). Fixture queries never showed it because their
-    graphs converge in 2–4 rounds.
+    planning (jstack-verified on the path probe kept at
+    ``git show a87ea52:tools/scale_probe_mst.py``; the pinning test
+    named below guards it now). Fixture queries never showed it because
+    their graphs converge in 2–4 rounds.
 
     Rebuilding the checkpointed internal RDD via
     ``internalCreateDataFrame`` produces a ``LogicalRDD`` with NO
@@ -417,8 +418,10 @@ def _has_internal_create(jss) -> bool:
 
 def min_label_fixpoint(edges, max_rounds=50, small_graph_nodes=100_000):
     """Min-label propagation to fixpoint over an undirected edge list
-    (``edges``: src/dst with both directions present, already
-    materialized by the caller). Returns (node, lab) for every
+    (``edges``: src/dst with both directions present, materialized by
+    the caller or a narrow derivation of a checkpointed frame, which
+    each round re-evaluates — boruvka_msf passes such a projection of
+    its sel checkpoint). Returns (node, lab) for every
     edge-touched node; the fixpoint — each node labeled with the min
     node id reachable — is unique regardless of propagation schedule,
     so both callers' oracles (recursive-CTE closure / doc-level
@@ -1012,7 +1015,7 @@ def largestar_fixpoint(canon, max_rounds=30):
     ``(labels, rounds)`` where labels is (node, lab) with lab =
     component minimum and rounds is the star-round count. Shared by
     graph_cc_largestar and the high-diameter scale probe
-    (tools/scale_probe_cc.py).
+    (``python -m tools.scale_probe cc``).
 
     Checkpoint-stats audit (round 12): although each round references
     ``canon`` multiple times, the per-round groupBy aggregates reset the
@@ -1473,7 +1476,7 @@ def graph_bfs_layers(spark, sf_dir):
     chain term for term; the delta-frontier refinement — join only the
     nodes whose dist changed last round, the standard BF/BFS pruning —
     is LANDED as ``sssp_fixpoint`` (graph_sssp_weighted; 30× joined-row
-    reduction measured in tools/scale_probe_sssp.py), and this op
+    reduction measured on the layered-DAG probe, SCALE.md), and this op
     deliberately keeps the full-frame form as the oracle-mirroring
     reference implementation; distances are
     exact BIGINTs so no fp is anywhere. Unreached nodes (farther than
@@ -1552,6 +1555,29 @@ def _sssp_oracle(rounds: int = _SSSP_ROUNDS) -> str:
     """
 
 
+def _ds_merge(d, prop):
+    """Relax-merge shared by sssp_fixpoint and delta_stepping_fixpoint:
+    fold min-candidates into the distance frame with a full outer join
+    (new nodes can appear), returning (new_d, improved)."""
+    m = (
+        d.join(prop, "node", "full")
+        .select(
+            "node",
+            F.least("dist", "cand").cast("bigint").alias("dist"),
+            (
+                F.col("cand").isNotNull()
+                & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
+            ).alias("improved"),
+        )
+        # lazy (r18): the caller's next full action (the frontier count)
+        # materializes the merge AND answers its termination test in one
+        # job — an eager checkpoint plus a separate count was two jobs per
+        # round (the min_label_fixpoint lesson)
+        .localCheckpoint(eager=False)
+    )
+    return m.select("node", "dist"), m.where("improved").select("node", "dist")
+
+
 def sssp_fixpoint(edges, seeds, max_rounds=None, n_edges=None):
     """Delta-frontier Bellman–Ford to the true fixpoint over a weighted
     edge list (``edges``: src/dst/w with both directions present,
@@ -1600,24 +1626,7 @@ def sssp_fixpoint(edges, seeds, max_rounds=None, n_edges=None):
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
         )
-        merged = (
-            d.join(prop, "node", "full")
-            .select(
-                "node",
-                F.least("dist", "cand").cast("bigint").alias("dist"),
-                (
-                    F.col("cand").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-                ).alias("improved"),
-            )
-            # lazy checkpoint + frontier count below: ONE job materializes
-            # the round's merge AND answers the termination test (the old
-            # eager-checkpoint-then-isEmpty pair was two jobs per round —
-            # r18 job consolidation, the min_label_fixpoint lesson)
-            .localCheckpoint(eager=False)
-        )
-        d = merged.select("node", "dist")
-        f = merged.where("improved").select("node", "dist")
+        d, f = _ds_merge(d, prop)
         if f.count() == 0:
             return d, rounds
     raise RuntimeError(
@@ -1680,7 +1689,7 @@ def graph_sssp_weighted(spark, sf_dir):
     only nodes whose distance improved last round are joined against
     the edge list (result-identical to full-frame relaxation, but
     Σ|frontier| ≈ O(|V|) joined rows total instead of |V| × rounds;
-    measured on the high-diameter probe, tools/scale_probe_sssp.py),
+    measured on the high-diameter probe, SCALE.md),
     terminating on the textbook empty-frontier condition, bounded by
     |V| rounds (shortest paths use <= |V|−1 edges) and raising on
     non-termination — the min_label_fixpoint / round-10 kcore
@@ -1704,32 +1713,12 @@ _SSSP_DELTA = 3  # bucket width ~ median edge weight (weights are 1..6 here);
                  # wasted relaxations, more buckets), larger -> BF-like
 
 
-def _ds_merge(d, prop):
-    """Relax-merge for delta_stepping_fixpoint: fold min-candidates into
-    the distance frame, returning (new_d, improved). Same full-outer
-    shape as sssp_fixpoint's inline merge (new nodes can appear)."""
-    m = (
-        d.join(prop, "node", "full")
-        .select(
-            "node",
-            F.least("dist", "cand").cast("bigint").alias("dist"),
-            (
-                F.col("cand").isNotNull()
-                & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-            ).alias("improved"),
-        )
-        # lazy (r18): the caller's next full action (the in-bucket
-        # frontier count) materializes the merge in the same job
-        .localCheckpoint(eager=False)
-    )
-    return m.select("node", "dist"), m.where("improved").select("node", "dist")
-
-
 def delta_stepping_fixpoint(edges, seeds, delta, max_rounds, n_edges=None):
     """Δ-stepping SSSP (Meyer & Sanders 2003) — the huge-diameter scale
     path sssp_fixpoint's own docstring points to, landed after the
-    probe demonstrated the crossover (tools/scale_probe_sssp.py
-    --delta-stepping, SCALE.md): on W parallel 64-hop shortcut-chains,
+    probe demonstrated the crossover (SCALE.md; the probe is
+    ``git show a87ea52:tools/scale_probe_sssp.py``, run with
+    --delta-stepping): on W parallel 64-hop shortcut-chains,
     delta-frontier Bellman-Ford relaxes Σ|frontier| ≈ W·L²/2 rows
     (every round improves every still-stale node by one) while
     Δ-stepping relaxes ≈ 2·W·L — 15× fewer — and at the 10× width the
@@ -1847,8 +1836,8 @@ def graph_sssp_delta(spark, sf_dir):
     ``delta_stepping_fixpoint``'s bucketed relaxation instead of
     delta-frontier Bellman-Ford, and verified against the SAME
     convergence-guarded oracle chain, so the driver hash-checks the
-    two engines agree. Exists because the decade probe
-    (tools/scale_probe_sssp.py --delta-stepping) showed BF's
+    two engines agree. Exists because the decade probe (SCALE.md)
+    showed BF's
     stale-value re-relaxation cascade dominates wall at 10× width
     (255.9 s vs 100.2 s; Σ|frontier| ratio 15×) on high-diameter
     shortcut-chain graphs — the 100 TB regime where distances settle
@@ -2015,8 +2004,7 @@ def graph_kcore(spark, sf_dir):
     analogue of the textbook O(|E|) bucket peel: every edge is charged
     at most once across the whole run, vs the whole-set form's
     |E| × rounds double semi-join (measured 82× joined-row and 1.9×
-    wall reduction on the staircase probe,
-    tools/scale_probe_kcore.py). Termination
+    wall reduction on the staircase probe, SCALE.md). Termination
     is the textbook empty-removed-set condition; rounds are bounded by
     |V|+1 (every non-final round removes >= 1 node) and a
     non-terminating loop raises rather than returning a truncated
@@ -2322,23 +2310,21 @@ def _mst_oracle(rounds: int = _MST_ROUNDS) -> str:
     """
 
 
-def boruvka_msf(eu, prune=True, round_edge_counts=None, rounds_out=None, n_edges=None):
+def boruvka_msf(eu, rounds_out=None, n_edges=None):
     """Borůvka minimum-spanning-forest loop over a checkpointed
     undirected edge list ``eu`` (lo, hi, w — (w, lo, hi) a total order,
     so the forest is unique). Factored out of graph_mst (r11) so the
-    pruning probe (tools/scale_probe_mst.py) can run the identical
-    loop with ``prune`` toggled and record per-round edge volumes in
-    ``round_edge_counts``. With ``prune`` (the production setting),
-    each round's edge list is the PREVIOUS round's surviving cross
-    edges — intra-component edges can never become cross again, so the
-    frame shrinks with the component count instead of staying |E|
-    every round. Returns the forest DataFrame; raises loudly past the
-    log2|V|+2 round bound (components at least halve per round).
+    bench instruments and the synthetic band row run the identical
+    loop. Each round's edge list is the PREVIOUS round's surviving
+    cross edges — intra-component edges can never become cross again,
+    so the frame shrinks with the component count instead of staying
+    |E| every round (the r11 pruning decade is recorded in SCALE.md;
+    its probe is ``git show a87ea52:tools/scale_probe_mst.py``).
+    Returns the forest DataFrame; raises loudly past the log2|V|+2
+    round bound (components at least halve per round).
 
     ``rounds_out``: optional list; one marker int appended per executed
-    round — a FREE round counter for bench.py's per-round instrument
-    (``round_edge_counts`` also counts rounds but pays an eu.count()
-    action per round, which would pollute a timing instrument).
+    round — a FREE round counter for bench.py's per-round instrument.
     ``n_edges`` (r18): pass the edge count when known to skip the one
     metadata count that feeds bounded_loop_frame at entry.
 
@@ -2358,8 +2344,8 @@ def boruvka_msf(eu, prune=True, round_edge_counts=None, rounds_out=None, n_edges
     projection of sel — the per-round sel⋈comp⋈comp rebuild, its two
     distinct shuffles, and bidir's own localCheckpoint (one Catalyst
     ``toRdd`` compile per round, the r18 verdict's residual-cost item)
-    are gone: 2 lazy checkpoints per round instead of 3, and the only
-    joins left in a round are the two cross⋈comp lookups."""
+    are gone: 3 checkpoints per round (cross, sel, comp) instead of 4,
+    and the only joins left in a round are the two cross⋈comp lookups."""
     if n_edges is None:
         n_edges = eu.count()
     eu = bounded_loop_frame(eu, n_edges)
@@ -2372,7 +2358,7 @@ def boruvka_msf(eu, prune=True, round_edge_counts=None, rounds_out=None, n_edges
     # itself through cross/sel/labels every round) — checkpoint it with
     # fresh_stats_checkpoint or the preserved sizeInBytes estimates
     # compound geometrically and driver planning blows up past ~8 rounds
-    # (see the helper's docstring; tools/scale_probe_mst.py regresses it).
+    # (see the helper's docstring).
     comp = fresh_stats_checkpoint(
         nodes.select("node", F.col("node").alias("comp")), eager=False
     )
@@ -2382,8 +2368,6 @@ def boruvka_msf(eu, prune=True, round_edge_counts=None, rounds_out=None, n_edges
     for rnd in range(max_rounds):
         if rounds_out is not None:
             rounds_out.append(rnd)
-        if round_edge_counts is not None:
-            round_edge_counts.append(eu.count())
         cross = (
             eu.join(
                 comp.withColumnRenamed("node", "lo").withColumnRenamed(
@@ -2402,16 +2386,15 @@ def boruvka_msf(eu, prune=True, round_edge_counts=None, rounds_out=None, n_edges
         )
         if cross.count() == 0:
             return msf.select("lo", "hi", "w")
-        if prune:
-            # Borůvka edge pruning (r11): components only ever GROW, so an
-            # intra-component edge can never become a cross edge again — the
-            # next round needs only this round's surviving cross edges. The
-            # edge list shrinks with the component count instead of staying
-            # |E| every round; at 100 TB that makes round r's edges⋈labels
-            # shuffle proportional to the ACTIVE frontier of the component
-            # graph, not the corpus. Forest output is unchanged (the pruned
-            # edges are exactly those the ca == cb filter would discard).
-            eu = cross.select("lo", "hi", "w")
+        # Borůvka edge pruning (r11): components only ever GROW, so an
+        # intra-component edge can never become a cross edge again — the
+        # next round needs only this round's surviving cross edges. The
+        # edge list shrinks with the component count instead of staying
+        # |E| every round; at 100 TB that makes round r's edges⋈labels
+        # shuffle proportional to the ACTIVE frontier of the component
+        # graph, not the corpus. Forest output is unchanged (the pruned
+        # edges are exactly those the ca == cb filter would discard).
+        eu = cross.select("lo", "hi", "w")
         # r19 round fusion: the endpoint component ids (ca, cb) are
         # carried THROUGH the min-struct aggregate instead of re-joining
         # sel against comp to rebuild them. (w, lo, hi) is a total order,
@@ -2512,8 +2495,8 @@ def graph_mst(spark, sf_dir):
     nodes, broadcast-sized after round 1), and components at least
     HALVE per round — O(log |V|) rounds total, each one
     edges⋈labels shuffle over an edge list the r11 pruning SHRINKS
-    geometrically (see ``boruvka_msf``; probe:
-    tools/scale_probe_mst.py). Runs to the TRUE fixpoint (no cross-
+    geometrically (see ``boruvka_msf``; decade in SCALE.md). Runs to
+    the TRUE fixpoint (no cross-
     component edge left), bounded by log2|V|+2 rounds with a loud
     raise; the unrolled oracle carries the same guard. Exact integers
     throughout; the property test replays the chain against a

@@ -10,9 +10,9 @@ an empty fixpoint, and `graph_coreness` peeled a 182-pair remnant:
 scan-only walls whose scheduling-floor jitter generated false watch
 crossings every hot round (two of round-13's four crossings were this
 family). From round 14 those four rows time REAL fixpoint loops over
-pinned DETERMINISTIC synthetic fixtures — the SCALE.md probe
-generators, promoted (tools/scale_probe_sssp/mst shapes at bench-sized
-pins; coreness uses a clique bundle, see CORE_SIZES). Inputs are built and localCheckpoint-ed ONCE outside
+pinned DETERMINISTIC synthetic fixtures — the SCALE.md sssp/mst probe
+shapes at bench-sized pins (coreness uses a clique bundle, see
+CORE_SIZES). Inputs are built and localCheckpoint-ed ONCE outside
 the timed runs, so each row is a pure loop-cost signal, the same
 protocol as the ivfpq probe-only row and the per-round fixpoint
 instruments. Correctness for the family is untouched: the registry
@@ -46,7 +46,7 @@ from spark_ml_helper_spark.operators.graph import (
 #: to (l+1, i) and (l+1, (i+1) mod W), integer weights 1 + (i+l) % 5,
 #: seeds = all of layer 0 — diameter L-1, so the delta-frontier loop
 #: runs a real L-1-round relaxation with a W-row frontier and a
-#: 2(L-1)W-row edge join per round (the tools/scale_probe_sssp shape).
+#: 2(L-1)W-row edge join per round (the SCALE.md sssp probe shape).
 #: Sizes are pinned for a 2-4 s band row: the distributed round floor
 #: is ~0.3-1 s at local[32] (measured round 14: the probe's 24x20k
 #: fixture = 23 rounds cost 23 s), so bench rows keep rounds AT the
@@ -75,8 +75,9 @@ SSSP_BENCH_DELTA = 10
 #: binary-tournament weights WITHIN each path (w(j) = 1 + v2(j+1)) —
 #: every component merges strictly pairwise, so the loop runs exactly
 #: log2(MST_PATH_LEN) forced rounds, but over a 28k-edge frame (real
-#: per-round volume). The full-log2-N ROUND-GROWTH evidence stays in
-#: tools/scale_probe_mst; a single 256-node tournament path here cost
+#: per-round volume). The full-log2-N ROUND-GROWTH evidence is in
+#: SCALE.md (``git show a87ea52:tools/scale_probe_mst.py``); a single
+#: 256-node tournament path here cost
 #: 7.4 s (8 rounds x ~0.9 s floor — Borůvka rounds carry an inner
 #: min-label closure), measured round 14.
 MST_PATHS = 4_096
@@ -97,12 +98,10 @@ CORE_COPIES = 2_000
 CORE_SIZES = (3, 4)
 
 
-def layered_dag(spark, L=None, W=None):
-    """CANONICAL layered-DAG generator — tools/scale_probe_sssp imports
-    this (at probe sizes) so the probe's round-growth evidence and the
-    band rows measure the same shape by construction (round-14 review
-    finding: the probe carried a copied twin of these expressions)."""
-    L, W = (L or SSSP_LAYERS), (W or SSSP_WIDTH)
+def layered_dag(spark, L=SSSP_LAYERS):
+    """Layered DAG of L layers x SSSP_WIDTH nodes and its layer-0 seeds,
+    both checkpointed (see SSSP_LAYERS for the shape)."""
+    W = SSSP_WIDTH
     base = spark.range(L - 1).selectExpr("id AS l").crossJoin(
         spark.range(W).selectExpr("id AS i")
     )
@@ -175,20 +174,16 @@ def make_sssp_delta(spark):
     return run
 
 
-def mst_bench_inputs(spark, paths=None, path_len=None):
+def mst_bench_inputs(spark):
     # w(j) = 1 + v2(j+1), the 2-adic valuation via bit_count((x&-x)-1),
     # applied to the WITHIN-PATH index j so every path merges pairwise.
-    # CANONICAL tournament generator — tools/scale_probe_mst calls this
-    # with paths=1, path_len=N (a single path is the bundle's edge case)
-    # so probe and band rows share one generator (round-14 review).
-    paths, path_len = (paths or MST_PATHS), (path_len or MST_PATH_LEN)
     return (
-        spark.range(paths)
+        spark.range(MST_PATHS)
         .selectExpr("id AS c")
-        .crossJoin(spark.range(path_len - 1).selectExpr("id AS j"))
+        .crossJoin(spark.range(MST_PATH_LEN - 1).selectExpr("id AS j"))
         .select(
-            (F.col("c") * path_len + F.col("j")).alias("lo"),
-            (F.col("c") * path_len + F.col("j") + 1).alias("hi"),
+            (F.col("c") * MST_PATH_LEN + F.col("j")).alias("lo"),
+            (F.col("c") * MST_PATH_LEN + F.col("j") + 1).alias("hi"),
             (
                 1
                 + F.bit_count(

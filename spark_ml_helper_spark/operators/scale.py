@@ -51,9 +51,10 @@ def join_skew_salted(spark, sf_dir):
     skew-join does this adaptively for the join alone; the explicit
     split composes with the downstream aggregation too.)
 
-    Measured (tools/scale_probe_skew.py, SCALE.md round-13 — the
-    fixture's uniform keys can't show this, so the probe builds a
-    30%-hot synthetic key): plain shuffle-join reducer skew is a
+    Measured (SCALE.md round-13; the probe is
+    ``git show a87ea52:tools/scale_probe_skew.py`` — the fixture's
+    uniform keys can't show this, so the probe builds a 30%-hot
+    synthetic key): plain shuffle-join reducer skew is a
     scale-invariant 14.5x max/median partition rows across three
     decades; this split cuts it to 3.5-4.3x, and its wall beats the
     plain join's once the hot reducer is the critical path (2.55 s vs

@@ -773,7 +773,8 @@ def build_dedup_index(hashed_docs):
     (skey, set_id = min doc_id, tok_hashes); bands = 8 (band_no,
     band_val) rows per rep. In production both frames are written once
     per snapshot (bands bucketed by band_val) and only APPENDED to —
-    scale_probe_incremental measures exactly that amortization."""
+    ``python -m tools.scale_probe incremental`` measures exactly that
+    amortization."""
     reps = (
         hashed_docs.groupBy("skey")
         .agg(F.min("doc_id").alias("set_id"), F.first("tok_hashes").alias("tok_hashes"))

@@ -302,9 +302,9 @@ def stream_run_dedup(spark, sf_dir):
     output projects to the key columns and the entry is hash-gated on the
     guarantee instead of rows-only on the accident.
 
-    MEASURED state decade (tools/scale_probe_stream.py, SCALE.md round-6
-    table; fixed 1.2M-event stream, key cardinality 5k→50k→500k): peak
-    state rows equal live-key cardinality EXACTLY at every decade, batch
+    MEASURED state decade (SCALE.md round-6 table, probe
+    ``git show a87ea52:tools/scale_probe_stream.py``; fixed 1.2M-event
+    stream, key cardinality 5k→50k→500k): peak state rows equal live-key cardinality EXACTLY at every decade, batch
     wall stays flat (3.3→3.1 s HDFS at 100× keys — input-bound once
     state fits), and RocksDB holds the same rows in 0.6/4.1/31.5 MB vs
     HDFSBacked's 1.6/23.8/235.3 MB (3–7× smaller, compressed off-heap
@@ -337,9 +337,9 @@ def stream_run_watermark(spark, sf_dir):
     union of all emissions is exactly "window end ≤ floor_ms(max ts) −
     30 min", which is what the oracle computes.
 
-    MEASURED state decade (tools/scale_probe_stream.py, SCALE.md round-6
-    table): state rows are keys × windows-inside-the-watermark —
-    35k/350k/667k at 5k/50k/500k keys over a fixed 1.2M-event stream
+    MEASURED state decade (SCALE.md round-6 table, probe
+    ``git show a87ea52:tools/scale_probe_stream.py``): state rows are
+    keys × windows-inside-the-watermark — 35k/350k/667k at 5k/50k/500k keys over a fixed 1.2M-event stream
     (the 100× decade saturates because the INPUT can't populate every
     (window, key) pair — the store isn't the bound), with rows_removed
     showing the watermark expiring state mid-run at every scale. Batch
@@ -393,8 +393,8 @@ def stream_run_stateful(spark, sf_dir):
     appeared in); with the bounded source taken in a single micro-batch
     (no maxFilesPerTrigger) that is exactly one FINAL row per user —
     the batch GROUP BY — so the run is hash-gated against it.
-    Cross-batch state carry is exercised by the state-store scale probe
-    (tools/scale_probe_stream.py) and the multi-batch runs below.
+    Cross-batch state carry is exercised by the multi-batch runs below
+    and was measured by the state-store decade in SCALE.md.
 
     State is one (double, bigint) row per live user — ∝ keys, not
     stream length, the same shape the round-6 state-store decade

@@ -94,6 +94,22 @@ def max_execution_id(store) -> int:
     )
 
 
+def drain_listener_bus(spark) -> None:
+    """The status store is fed ASYNCHRONOUSLY by the listener bus:
+    right after save() returns, the execution (or its final metric
+    values) may not be in the store yet, which mis-attributes fast
+    queries to their successor's [first, last) window (observed:
+    126/429 entries read n_execs=0 before this drain). The same
+    barrier Spark's own test suites use; degrade to a fixed sleep
+    if the private accessor moves."""
+    try:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
+    except Exception:
+        import time
+
+        time.sleep(1.0)
+
+
 def collect_execution_metrics(store, after_id: int) -> dict:
     """Aggregate SQLMetrics over every execution with id > after_id."""
     agg: dict[str, list[str]] = {}
@@ -150,28 +166,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     store = spark._jsparkSession.sharedState().statusStore()
 
-    def drain_listener_bus() -> None:
-        """The status store is fed ASYNCHRONOUSLY by the listener bus:
-        right after save() returns, the execution (or its final metric
-        values) may not be in the store yet, which mis-attributes fast
-        queries to their successor's [first, last) window (observed:
-        126/429 entries read n_execs=0 before this drain). The same
-        barrier Spark's own test suites use; degrade to a fixed sleep
-        if the private accessor moves."""
-        try:
-            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-        except Exception:
-            import time
-
-            time.sleep(1.0)
-
     for name in names:
-        drain_listener_bus()
+        drain_listener_bus(spark)
         after_id = max_execution_id(store)
         REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        drain_listener_bus()
+        drain_listener_bus(spark)
         rec = {"query": name, "sf_dir": sf_dir}
         rec.update(collect_execution_metrics(store, after_id))
         print(json.dumps(rec), flush=True)
