@@ -28,15 +28,18 @@ load_all_operators()
 # verification window (~50 queries, taken from the head of ``queries()``)
 # re-records them.
 #
-# Head: the queries whose code paths lost a probe-only option or gained a
-# shared helper — Borůvka without its prune/edge-count switches, the SSSP
-# relax-merge shared with Δ-stepping, the set-similarity kernels without
-# n_blocks, and round_half_up's isfinite guard (ml_gmm_em). All were locally
-# oracle-verified at sf0.01+sf0.001. Then the r19 pins (Borůvka round
-# fusion, kcore/Δ-stepping checkpoint trims, the pretrain-funnel fusion,
-# the incremental-dedup decision fusion, the lazy per-round training
-# checkpoints); the stalest-first tail then drains the oldest record ring.
+# Head: graph_pagerank, which now returns an empty frame on empty events
+# instead of raising. Then the queries whose code paths lost a probe-only
+# option or gained a shared helper — Borůvka without its prune/edge-count
+# switches, the SSSP relax-merge shared with Δ-stepping, the set-similarity
+# kernels without n_blocks, and round_half_up's isfinite guard (ml_gmm_em).
+# All were locally oracle-verified at sf0.01+sf0.001. Then the r19 pins
+# (Borůvka round fusion, kcore/Δ-stepping checkpoint trims, the
+# pretrain-funnel fusion, the incremental-dedup decision fusion, the lazy
+# per-round training checkpoints); the stalest-first tail then drains the
+# oldest record ring.
 _REVERIFY_FIRST: list[str] = [
+    "graph_pagerank",
     "graph_mst",
     "graph_sssp_weighted",
     "graph_sssp_delta",

@@ -14,17 +14,17 @@ across the whole suite (round 14): the box's thermal/scheduler state
 swings on the ~10-minute timescale of a full bench session, so
 back-to-back per-query runs entangle a query's number with its POSITION
 in the suite (measured: graph_sssp_weighted min-of-2 read 4.46 s late
-in a sequential session vs 3.44 s solo median on the same tree;
-gen_baseline_bands measured opposite-sign intra-draw gradients the same
-day). Round-robin makes box state common-mode across rows — the same
-fix the band generator got, so BENCH-vs-band comparisons sample the
-same way on both sides.
+in a sequential session vs 3.44 s solo median on the same tree).
+Round-robin makes box state common-mode across rows.
 Between runs both the Python and JVM collectors run so one query's
 localCheckpoint blocks are reclaimed before the next is timed (the
 ContextCleaner frees them only after Python drops its references). Each
 run materializes the full result through the noop sink (count() alone
 lets Spark skip column decode). Spark logs go to stderr; stdout carries
 only the JSON line.
+
+This is the 40-row headline suite. Gated parent-vs-change comparisons
+use perfbench/ (see BENCHMARK.json and BASELINE.md).
 """
 
 from __future__ import annotations
@@ -74,9 +74,8 @@ HEADLINE = [
     # The four rows below run PINNED SYNTHETIC fixpoint fixtures from
     # round 14 on (operators/graph_bench.py) — the sf0.1 TPC-H
     # co-occurrence fixture degenerates to a 1-edge scan wall for this
-    # family (BASELINE.md round-12 note), so the rows timed nothing
-    # about the loops and generated false watch crossings every hot
-    # round. Inputs are built+checkpointed outside the timed runs.
+    # family (BASELINE.md), so the rows timed nothing about the loops.
+    # Inputs are built+checkpointed outside the timed runs.
     "graph_sssp_weighted",     # delta-frontier Bellman-Ford (synthetic DAG)
     "graph_coreness",          # full core-number decomposition (clique bundle)
     "graph_mst",               # Boruvka forest (tournament-path bundle)
@@ -103,8 +102,7 @@ def main() -> None:
         df = REGISTRY[name].fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
 
-    # the warm-up + interleaved timed passes live in benchlib so this
-    # harness and tools/gen_baseline_bands cannot drift apart (the
+    # the warm-up + interleaved timed passes live in benchlib (the
     # synthetic fixpoint rows' inputs are built there too, outside the
     # timed runs); the solo instruments below share benchlib.warm_runs
     from spark_ml_helper_spark.benchlib import make_runners, run_interleaved, warm_runs
@@ -142,9 +140,9 @@ def main() -> None:
 
     # SemDeDup apply-only instrument (round-12, same pattern): time the
     # ONLINE pair stage against a pre-trained cell assignment — the
-    # amortized-production shape the dedup_semantic band's caveat
-    # adjudicates (~2.5 s of its ~4 s end-to-end is per-invocation
-    # Lloyd re-training). Own row, not summed.
+    # amortized-production shape (~2.5 s of dedup_semantic's ~4 s
+    # end-to-end is per-invocation Lloyd re-training). Own row, not
+    # summed.
     from spark_ml_helper_spark.operators.vectors import _km_train, semdedup_apply
 
     _, _, km_final = _km_train(spark, sf_dir)
@@ -159,7 +157,7 @@ def main() -> None:
     # the round-12 Δ-stepping instrument to every graph fixpoint
     # family). The sf0.1 fixture DEGENERATES for ≥4-cooccur graphs
     # (1 edge, 0 hub seeds, ~0 loop rounds — TPC-H scaling dilutes
-    # co-occurrence; BASELINE.md round-12 note), so the headline rows
+    # co-occurrence; BASELINE.md), so the headline rows
     # for graph_mst / graph_cc-family / graph_sssp_* there time the
     # edge-build scan, not the loop — a loop regression would be
     # INVISIBLE at sf0.1. The stable signal is seconds per round
@@ -245,24 +243,6 @@ def main() -> None:
         "dedup_semantic_apply_only": semdedup_time,
         **fixpoints,
         "fixpoint_instrument_sf": inst_sf,
-        # box-state sentinel (round-13, judge item 1): agg_group is the
-        # suite's first, cheapest, most plan-stable row — its warm
-        # min-of-2 time IS the box-temperature reading. BASELINE.md's
-        # band table header records the same sentinel at band-draw
-        # time, so a BENCH_rN-vs-band comparison can normalize out
-        # global box-state drift (the cause of every investigated
-        # "regression" in rounds 11 AND 12) instead of re-adjudicating.
-        "box_sentinel": {"query": "agg_group", "sec": times["agg_group"]},
-        # heavy sentinel (round-14, judge item 3): the cheap sentinel
-        # over-reads scheduler heat ~1.35x vs heavy CPU-bound plans
-        # (measured round 13), so a second fixed control — dedup_simhash,
-        # a stable non-iterative shuffle-heavy plan untouched since
-        # round 7 — brackets the box factor from the other side.
-        # tools/bench_compare uses the pair as its masking cross-check.
-        "box_sentinel_heavy": {
-            "query": "dedup_simhash",
-            "sec": times["dedup_simhash"],
-        },
         "sf": sf,
     }
     print(json.dumps(out))

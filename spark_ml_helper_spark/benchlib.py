@@ -1,15 +1,13 @@
-"""Shared bench/band measurement loop (round 14).
+"""Shared bench measurement loops.
 
-bench.py and tools/gen_baseline_bands must sample the suite the SAME
-way — one warm-up pass, then N timed ROUND-ROBIN passes with Python+JVM
-GC before every run — or BENCH-vs-band comparisons re-acquire the
-position-vs-box-state confound the interleaving removed (two same-day
-sequential draws measured opposite-sign intra-draw gradients; see
-BASELINE.md protocol 2d). Keeping the loop here makes that invariant
-structural instead of copy-paste discipline across the two callers
-(round-14 review finding); tools/bench_isolated deliberately keeps its
-own sequential solo protocol (that is its whole point) but shares the
-SYNTH_GRAPH_BENCH runner branch via make_runners' table.
+Callers: bench.py (``run_interleaved`` over ``make_runners`` for the
+headline rows, ``warm_runs`` for its solo instruments), perfbench/run.py
+(``make_runners`` and ``collect_garbage``) and tools/scale_probe
+(``warm_runs``). The interleaved loop runs one warm-up pass, then N
+timed ROUND-ROBIN passes with Python+JVM GC before every run, so box
+state is common-mode across rows instead of tracking a row's position
+in the suite. ``make_runners`` routes the SYNTH_GRAPH_BENCH rows to
+their pinned-fixture runners, so every caller times the same quantity.
 """
 
 from __future__ import annotations

@@ -287,6 +287,8 @@ def _pagerank_ranks(spark, sf_dir):
         trans.select(F.col("dst").alias("item"))
     ).distinct().coalesce(1).localCheckpoint()
     n = verts.count()  # scalar cardinality, driver-side by design
+    if n == 0:  # no events: no vertices to rank, and no 1/n to seed with
+        return verts.select("item", F.lit(0.0).alias("rank"))
     sources = trans.select("src").distinct()
     ranks = verts.select("item", F.lit(1.0 / n).alias("rank"))
     for _ in range(10):

@@ -1,10 +1,10 @@
-"""Pinned synthetic-graph fixpoint runners for the bench/band rows
+"""Pinned synthetic-graph fixpoint runners for the bench rows
 (round 14, judge item 4).
 
 TPC-H scaling DILUTES co-occurrence (10x customers x 10x suppliers,
 constant lines per order), so the >=4-cooccur fixture graph DEGENERATES
-at sf0.1 — 1 edge (BASELINE.md round-12 measurement). The headline
-bench/band rows for `graph_mst` / `graph_sssp_weighted` /
+at sf0.1 — 1 edge (round-12 measurement; BASELINE.md). The headline
+bench rows for `graph_mst` / `graph_sssp_weighted` /
 `graph_sssp_delta` there timed the orders⋈lineitem edge-build scan plus
 an empty fixpoint, and `graph_coreness` peeled a 182-pair remnant:
 scan-only walls whose scheduling-floor jitter generated false watch
@@ -21,14 +21,14 @@ oracles at sf0.001/0.01 where the fixture is real.
 
 Every generator is seed-free arithmetic over ``spark.range`` (layered
 DAG, binary-tournament path bundle, clique bundle) — byte-identical
-inputs on every box, every round, so band movement on these rows means
+inputs on every box, every round, so movement on these rows means
 the LOOP changed, never the fixture. Fixture non-degeneracy (every
 level/round carries real mass) is pytest-pinned with exact expected
 counts (tests/test_pipeline.py::test_synth_graph_bench_fixtures).
 
-Consumers: bench.py (headline rows), tools/gen_baseline_bands (band
-rows), tools/bench_isolated (solo adjudication) — all three branch on
-``SYNTH_GRAPH_BENCH`` so the three measurements stay the same quantity.
+Consumers: bench.py (headline rows) and perfbench/run.py (the loops
+workload), both through ``benchlib.make_runners``, which branches on
+``SYNTH_GRAPH_BENCH``; perfbench/verify.py checks the fixture sizes.
 """
 
 from __future__ import annotations

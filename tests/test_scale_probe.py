@@ -28,9 +28,11 @@ def test_cited_tools_exist():
     # a `tools/<name>.py` or `tools.<name>` citation must name a file on
     # disk; `git show <commit>:tools/<name>.py` cites a deleted one on
     # purpose and is skipped by the lookbehind
-    docs = ["SCALE.md", "README.md", "OPERATING.md", ".claude/skills/verify/SKILL.md"]
+    docs = ["SCALE.md", "README.md", "OPERATING.md", "BASELINE.md", "bench.py",
+            ".claude/skills/verify/SKILL.md"]
     paths = [os.path.join(ROOT, d) for d in docs]
     paths += glob.glob(os.path.join(ROOT, "spark_ml_helper_spark", "**", "*.py"), recursive=True)
+    paths += glob.glob(os.path.join(ROOT, "tools", "*.py"))
     missing = []
     for path in paths:
         with open(path, encoding="utf-8") as fh:

@@ -97,20 +97,19 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     store = spark._jsparkSession.sharedState().statusStore()
 
-    from tools.shuffle_ledger import max_execution_id
-    from tools.window_volume_report import _drain
+    from tools.shuffle_ledger import drain_listener_bus, max_execution_id
 
     if not names:
         names = list(REGISTRY)
 
     overall = 0
     for name in names:
-        _drain(spark)
+        drain_listener_bus(spark)
         after_id = max_execution_id(store)
         REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        _drain(spark)
+        drain_listener_bus(spark)
         joins = bnlj_build_rows(store, after_id)
         if not joins:
             continue

@@ -1,6 +1,6 @@
 """Per-query data-VOLUME ledger from Spark's SQL status store.
 
-The timing bench (bench.py / BASELINE.md bands) answers "how long"; this
+The timing benches (bench.py, perfbench/) answer "how long"; this
 answers the question the 100 TB design brief actually asks: HOW MUCH
 DATA MOVES. For each query it materializes the plan once and aggregates
 the executed plan's SQLMetrics across every SQL execution the query

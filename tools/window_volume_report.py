@@ -52,15 +52,6 @@ _WINDOW_NODES = ("Window", "WindowInPandas")
 _ROW_METRICS = ("number of output rows", "records read")
 
 
-def _drain(spark) -> None:
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-    except Exception:
-        import time
-
-        time.sleep(1.0)
-
-
 def _parse_rows(s: str) -> int | None:
     s = s.strip().splitlines()[-1].split(" ")[0]
     m = re.match(r"([\d,]+)", s)
@@ -157,15 +148,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     store = spark._jsparkSession.sharedState().statusStore()
 
-    from tools.shuffle_ledger import max_execution_id
+    from tools.shuffle_ledger import drain_listener_bus, max_execution_id
 
     for name in names:
-        _drain(spark)
+        drain_listener_bus(spark)
         after_id = max_execution_id(store)
         REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        _drain(spark)
+        drain_listener_bus(spark)
         wins = window_input_rows(store, after_id)
         print(
             json.dumps(
