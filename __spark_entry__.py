@@ -28,8 +28,9 @@ load_all_operators()
 # verification window (~50 queries, taken from the head of ``queries()``)
 # re-records them.
 #
-# Head: graph_pagerank, which now returns an empty frame on empty events
-# instead of raising. Then the queries whose code paths lost a probe-only
+# Head: graph_cc, whose edge list now comes from the shared
+# _cooccur_edges builder, and graph_pagerank, which now returns an empty
+# frame on empty events instead of raising. Then the queries whose code paths lost a probe-only
 # option or gained a shared helper — Borůvka without its prune/edge-count
 # switches, the SSSP relax-merge shared with Δ-stepping, the set-similarity
 # kernels without n_blocks, and round_half_up's isfinite guard (ml_gmm_em).
@@ -39,6 +40,7 @@ load_all_operators()
 # per-round training checkpoints); the stalest-first tail then drains the
 # oldest record ring.
 _REVERIFY_FIRST: list[str] = [
+    "graph_cc",
     "graph_pagerank",
     "graph_mst",
     "graph_sssp_weighted",

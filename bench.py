@@ -171,8 +171,8 @@ def main() -> None:
     # dir was absent). Rows are NOT summed into the headline total.
     from spark_ml_helper_spark.operators.graph import (
         _SSSP_DELTA,
+        _cooccur_edges,
         boruvka_msf,
-        cc_inputs,
         delta_stepping_fixpoint,
         min_label_fixpoint,
         mst_inputs,
@@ -210,7 +210,7 @@ def main() -> None:
     # union-find shortcut (1 task, 1 "round") would hide. This one
     # instrument covers the shared min_label_fixpoint helper for BOTH
     # its callers (graph_cc and dedup_clusters differ only in edge set).
-    cc_edges = cc_inputs(spark, inst_dir)
+    cc_edges = _cooccur_edges(spark, inst_dir)
 
     def run_cc() -> int:
         _, r = min_label_fixpoint(cc_edges, small_graph_nodes=0)

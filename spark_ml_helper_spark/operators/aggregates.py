@@ -59,6 +59,7 @@ def agg_global(spark, sf_dir):
         GROUP BY l_returnflag, l_linestatus
     """,
     family="aggregates",
+    max_exchanges=2,  # partial->final agg + output sort
 )
 def agg_group(spark, sf_dir):
     """Flagship: TPC-H Q1-shape pricing summary (filter → grouped agg →
@@ -768,6 +769,7 @@ def agg_gini(spark, sf_dir):
         WHERE 2 * cnt * nd >= 3 * n
     """,
     family="aggregates",
+    bnlj="1-row total/distinct count broadcast back onto the value counts",
 )
 def agg_heavy_hitters(spark, sf_dir):
     """Exact heavy hitters: parts whose lineitem frequency is ≥ 1.5×
@@ -898,6 +900,7 @@ def agg_bitmap_distinct(spark, sf_dir):
         WHERE 2 * cw >= tw
     """,
     family="aggregates",
+    bnlj="1-row total weight broadcast onto the cumulative-weight rows",
 )
 def agg_weighted_median(spark, sf_dir):
     """Quantity-weighted median line price — the lower weighted median
@@ -949,6 +952,7 @@ def agg_weighted_median(spark, sf_dir):
         GROUP BY 1, 2
     """,
     family="aggregates",
+    bnlj="1-row min/max bounds broadcast onto the values",
 )
 def agg_histogram_equiwidth(spark, sf_dir):
     """Equal-width 10-bin value histogram of order totals — the
@@ -1187,6 +1191,7 @@ def agg_bitmap_intersect(spark, sf_dir):
         FROM c
     """,
     family="aggregates",
+    bnlj="1-row grand total broadcast back (replaced an unpartitioned sum window)",
 )
 def agg_ratio_to_report(spark, sf_dir):
     """RATIO_TO_REPORT — each order's share of its customer's spend
@@ -1516,6 +1521,7 @@ _BLOOM_HASHES = [(1_000_003, 101), (999_983, 797), (1_000_033, 4099)]
         FROM flagged
     """,
     family="aggregates",
+    bnlj="1-row bits-set count crossJoined onto the 1-row report",
 )
 def agg_bloom_filter(spark, sf_dir):
     """Bloom-filter membership (Bloom 1970) built and audited end to
@@ -1636,6 +1642,7 @@ _HLL_ALPHA = 0.718273  # 0.7213 / (1 + 1.079/m), Flajolet et al. 2007
         FROM est CROSS JOIN ex
     """,
     family="aggregates",
+    bnlj="1-row exact-count frame crossJoined onto the 1-row estimate",
 )
 def agg_hll_manual(spark, sf_dir):
     """Hand-rolled HyperLogLog (Flajolet et al. 2007) with the pinned

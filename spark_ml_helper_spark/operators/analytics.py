@@ -44,6 +44,7 @@ _FUNNEL_WINDOW = "INTERVAL 24 HOURS"
                round((SELECT count(*) FROM p) / (SELECT count(*) FROM c), 6) AS rate_purchase
     """,
     family="analytics",
+    bnlj="1-row step counts crossJoined into the 1-row funnel",
 )
 def funnel_ordered(spark, sf_dir):
     """Ordered conversion funnel view → click → purchase with a 24h
@@ -402,6 +403,7 @@ def events_anomaly_mad(spark, sf_dir):
         )
     """,
     family="analytics",
+    bnlj="1-row max-day and quartile-cut frames broadcast onto the customers",
 )
 def rfm_segments(spark, sf_dir):
     """RFM customer segmentation (recency / frequency / monetary), the
@@ -495,6 +497,7 @@ _LIFT_TOP_K = 100
         LIMIT {_LIFT_TOP_K}
     """,
     family="analytics",
+    bnlj="1-row order count broadcast onto the pair counts",
 )
 def basket_lift(spark, sf_dir):
     """Market-basket co-occurrence lift: for part pairs bought in the
@@ -712,6 +715,7 @@ def events_attribution(spark, sf_dir):
         GROUP BY day
     """,
     family="analytics",
+    bnlj="1-row max-day frame broadcast onto the daily users",
 )
 def events_active_users(spark, sf_dir):
     """DAU / WAU / MAU active-user rollups with the DAU/MAU stickiness
@@ -798,6 +802,7 @@ def events_active_users(spark, sf_dir):
         FROM daily CROSS JOIN stats
     """,
     family="analytics",
+    bnlj="1-row mean/stddev broadcast onto the daily rows",
 )
 def pipeline_daily_kpis(spark, sf_dir):
     """The composite daily-operations report a team schedules over the
@@ -907,6 +912,7 @@ def events_rate_anomaly(spark, sf_dir):
         GROUP BY t, n_users
     """,
     family="analytics",
+    bnlj="1-row user total broadcast onto the survival rows",
 )
 def events_survival_curve(spark, sf_dir):
     """User-lifetime survival curve: S(t) = fraction of users whose
@@ -980,6 +986,7 @@ def events_survival_curve(spark, sf_dir):
         FROM status s FULL JOIN churned c ON s.d = c.d
     """,
     family="analytics",
+    bnlj="1-row last-day frame broadcast onto the user-days",
 )
 def events_growth_accounting(spark, sf_dir):
     """Daily growth accounting — the new / retained / resurrected /
@@ -1066,6 +1073,7 @@ def events_growth_accounting(spark, sf_dir):
         FROM d
     """,
     family="analytics",
+    bnlj="1-row sample sizes broadcast onto the cumulative counts",
 )
 def stats_ks_test(spark, sf_dir):
     """Two-sample Kolmogorov-Smirnov test on the order-value
@@ -1154,6 +1162,7 @@ def stats_ks_test(spark, sf_dir):
         FROM stat
     """,
     family="analytics",
+    bnlj="1-row n and row/column counts broadcast onto the contingency cells",
 )
 def stats_chi2(spark, sf_dir):
     """Chi-square independence test on the priority × status
@@ -1230,6 +1239,7 @@ def stats_chi2(spark, sf_dir):
         FROM w
     """,
     family="analytics",
+    bnlj="1-row x 1-row join of the 2-group aggregate",
 )
 def stats_ttest_welch(spark, sf_dir):
     """Welch's unequal-variance t-test on URGENT vs LOW order values —
@@ -1502,6 +1512,7 @@ def events_session_stats(spark, sf_dir):
         GROUP BY est.n, est.mean_est
     """,
     family="analytics",
+    bnlj="1-row point estimate broadcast onto the bootstrap means",
 )
 def stats_bootstrap_ci(spark, sf_dir):
     """Deterministic POISSON bootstrap 95% CI for the mean order value:
@@ -1592,6 +1603,7 @@ def stats_bootstrap_ci(spark, sf_dir):
         FROM g CROSS JOIN tot
     """,
     family="analytics",
+    bnlj="1-row event total broadcast onto the hour x dow counts",
 )
 def events_heatmap_hour_dow(spark, sf_dir):
     """Hour-of-day × day-of-week activity heatmap (ISO weekday 1-7 ×
@@ -1798,6 +1810,7 @@ def events_adoption_curve(spark, sf_dir):
         GROUP BY abc_class
     """,
     family="analytics",
+    bnlj="1-row revenue total broadcast back onto the cumulative-revenue rows",
 )
 def abc_analysis(spark, sf_dir):
     """ABC (Pareto) classification of parts by revenue: A = parts
@@ -2649,6 +2662,7 @@ def stats_cuped(spark, sf_dir):
         FROM ss
     """,
     family="analytics",
+    bnlj="1-row grand totals broadcast onto the per-group stats",
 )
 def stats_anova(spark, sf_dir):
     """One-way ANOVA across the five order priorities: F = between-
@@ -2732,6 +2746,7 @@ def stats_anova(spark, sf_dir):
         FROM risk WHERE n_at_risk > 0
     """,
     family="analytics",
+    bnlj="1-row horizon and a day spine (15 rows at sf0.01) broadcast",
 )
 def events_hazard_rate(spark, sf_dir):
     """Discrete-time conversion HAZARD: h(t) = P(first purchase on day
@@ -2807,6 +2822,7 @@ def events_hazard_rate(spark, sf_dir):
         GROUP BY o_orderpriority, r_all, n_all
     """,
     family="analytics",
+    bnlj="1-row overall return rate broadcast onto the lines",
 )
 def orders_return_rate(spark, sf_dir):
     """Return-rate scoreboard per priority: share of lineitems flagged
@@ -2896,6 +2912,7 @@ def orders_return_rate(spark, sf_dir):
         FROM sweep
     """,
     family="analytics",
+    bnlj="1-row peak load broadcast back onto the sweep",
 )
 def events_peak_concurrency(spark, sf_dir):
     """Peak concurrent sessions via the SWEEP LINE: explode each
@@ -3131,6 +3148,7 @@ def orders_duplicate_payment(spark, sf_dir):
         GROUP BY agg.diff
     """,
     family="analytics",
+    bnlj="1-row aggregate difference broadcast onto the strata",
 )
 def stats_simpson_check(spark, sf_dir):
     """Simpson's-paradox screen: does the aggregate group difference
@@ -3203,6 +3221,7 @@ def stats_simpson_check(spark, sf_dir):
         FROM yr a JOIN yr b ON a.y = 1996 AND b.y = 1997
     """,
     family="analytics",
+    bnlj="1-row x 1-row join of the two per-year aggregates",
 )
 def orders_revenue_bridge(spark, sf_dir):
     """Revenue BRIDGE (waterfall decomposition) 1996 → 1997:
@@ -3270,6 +3289,7 @@ def orders_revenue_bridge(spark, sf_dir):
         GROUP BY tot.n_customers, tot.total_c
     """,
     family="analytics",
+    bnlj="1-row revenue total broadcast onto the top-10 customers",
 )
 def orders_whale_concentration(spark, sf_dir):
     """Whale-risk concentration: the revenue share held by the top-10

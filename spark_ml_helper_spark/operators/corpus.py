@@ -46,6 +46,7 @@ from spark_ml_helper_spark.operators.text import _tokens
         WHERE c_ab >= 5
     """,
     family="corpus",
+    bnlj="1-row unigram/bigram totals crossJoined onto the bigram counts",
 )
 def text_collocations(spark, sf_dir):
     """Collocation mining: PMI = ln(p(ab) / (p(a)·p(b))) over adjacent
@@ -209,6 +210,7 @@ def corpus_decontaminate(spark, sf_dir):
         FROM per_lang, tot
     """,
     family="corpus",
+    bnlj="1-row document total crossJoined onto the per-language counts",
 )
 def corpus_mix_weights(spark, sf_dir):
     """Language-mix reweighting: per-language corpus shares and the
@@ -268,6 +270,7 @@ _PACK_L = 512  # target sequence length in tokens
         FROM contrib GROUP BY seq_id
     """,
     family="corpus",
+    global_window="global token cumsum; scale path = per-shard packing with chained offsets",
 )
 def corpus_pack_sequences(spark, sf_dir):
     """Token-stream sequence packing (the GPT-style pretraining batcher):
@@ -367,6 +370,7 @@ def text_repetition(spark, sf_dir):
         GROUP BY tok.doc_id
     """,
     family="corpus",
+    bnlj="1-row token total crossJoined onto the tokens",
 )
 def text_unigram_logprob(spark, sf_dir):
     """Unigram language-model scoring: each document's mean token
@@ -543,6 +547,7 @@ def pipeline_pretrain(spark, sf_dir):
         GROUP BY bg.doc_id
     """,
     family="corpus",
+    bnlj="1-row vocabulary size crossJoined onto the bigram rows",
 )
 def corpus_bigram_lm(spark, sf_dir):
     """Bigram language-model scoring with add-one (Laplace) smoothing:
@@ -1247,6 +1252,7 @@ def corpus_curriculum_order(spark, sf_dir):
         FROM stats CROSS JOIN nd
     """,
     family="corpus",
+    bnlj="1-row doc count broadcast onto the per-term stats",
 )
 def text_burstiness(spark, sf_dir):
     """Term burstiness via the Fano factor (variance-to-mean ratio of
@@ -1320,6 +1326,7 @@ def text_burstiness(spark, sf_dir):
         FROM m
     """,
     family="corpus",
+    bnlj="6-row doc-cap spine joined on doc_id < cap",
 )
 def text_heaps_law(spark, sf_dir):
     """Heaps'-law fit: vocabulary growth V(n) ≈ K·n^β measured at six
@@ -1431,6 +1438,7 @@ def text_heaps_law(spark, sf_dir):
         GROUP BY doc_id
     """,
     family="corpus",
+    bnlj="1-row unigram total broadcast onto the scored trigrams",
 )
 def corpus_trigram_lm(spark, sf_dir):
     """Trigram language-model scoring with STUPID BACKOFF (Brants et
@@ -1705,6 +1713,7 @@ def text_js_divergence(spark, sf_dir):
         WHERE p.d12 >= 50
     """,
     family="corpus",
+    bnlj="1-row doc count broadcast onto the pair counts",
 )
 def text_cooccurrence_pmi(spark, sf_dir):
     """Document-level co-occurrence PMI: for token pairs sharing ≥ 50
@@ -1792,6 +1801,8 @@ def text_cooccurrence_pmi(spark, sf_dir):
         GROUP BY r.source
     """,
     family="corpus",
+    bnlj="1-row token totals crossJoined onto the ranked documents",
+    global_window="global quality-rank token cumsum; scale path = per-bucket budgets",
 )
 def corpus_token_budget(spark, sf_dir):
     """TOKEN-BUDGET SELECTION — the data-constrained-scaling step every
@@ -1889,6 +1900,7 @@ def corpus_token_budget(spark, sf_dir):
         FROM plan
     """,
     family="corpus",
+    bnlj="1-row sqrt-token total crossJoined onto the per-source rows",
 )
 def corpus_epoch_schedule(spark, sf_dir):
     """EPOCH SCHEDULING under temperature-based source mixing — the
@@ -2032,7 +2044,10 @@ def _word_embed_oracle() -> str:
     """
 
 
-@query("vec_word_embed_svd", oracle=_word_embed_oracle(), family="corpus")
+@query(
+    "vec_word_embed_svd", oracle=_word_embed_oracle(), family="corpus",
+    bnlj="1-row totals and vocabulary size crossJoined per power round",
+)
 def vec_word_embed_svd(spark, sf_dir):
     """Count-based WORD EMBEDDINGS, fully oracle-verified — the
     deterministic twin of the rows-only ml_word2vec, resting on the
@@ -2352,7 +2367,10 @@ def _bpe_segment_oracle() -> str:
     """
 
 
-@query("bpe_segment_stats", oracle=_bpe_segment_oracle(), family="corpus")
+@query(
+    "bpe_segment_stats", oracle=_bpe_segment_oracle(), family="corpus",
+    bnlj="1-row vocabulary frame crossJoined onto each merge round's aggregate",
+)
 def bpe_segment_stats(spark, sf_dir):
     """Segmentation quality report for the trained BPE merges — what a
     tokenizer-selection pipeline actually reads off a candidate merge
@@ -2426,6 +2444,7 @@ _N_SHARDS = 16
         FROM per CROSS JOIN tot
     """,
     family="corpus",
+    bnlj="1-row corpus total crossJoined onto the per-shard stats",
 )
 def corpus_shard_stats(spark, sf_dir):
     """OUTPUT SHARDING audit — the webdataset/shard-manifest step every

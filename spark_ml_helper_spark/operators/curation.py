@@ -140,6 +140,7 @@ def dedup_clusters(spark, sf_dir):
         HAVING count(*) >= 5 AND count(*) <= 0.6 * (SELECT n_docs FROM n)
     """,
     family="curation",
+    bnlj="1-row doc count crossJoined onto the doc frequencies",
 )
 def text_vocab_prune(spark, sf_dir):
     """Document-frequency vocabulary pruning (CountVectorizer minDF/maxDF
@@ -286,6 +287,7 @@ def fuzzy_match(spark, sf_dir):
           ON grid.event_type = h.event_type AND grid.hr = h.hr
     """,
     family="curation",
+    bnlj="hourly time spine (720 rows) crossJoined with the event types",
 )
 def ts_gap_fill(spark, sf_dir):
     """Dense time-series regularization: the hourly (event_type × hour)
@@ -604,6 +606,7 @@ _CONTAIN_TAU = 0.9
         FROM ts t LEFT JOIN agg ON t.doc_id = agg.a_id
     """,
     family="curation",
+    bnlj="G-row block-id spine (G=4) fanning set blocks into block pairs",
 )
 def dedup_containment(spark, sf_dir):
     """Near-SUBSET duplicate sweep: for each document, how many OTHER
@@ -998,6 +1001,7 @@ def dq_reconcile(spark, sf_dir):
         GROUP BY q1, q3, lo, hi
     """,
     family="curation",
+    bnlj="1-row quartile fences broadcast onto the values",
 )
 def dq_outlier_iqr(spark, sf_dir):
     """Tukey-fence outlier audit (IQR rule: outside [Q1−1.5·IQR,
@@ -1187,6 +1191,7 @@ def dq_split_leakage(spark, sf_dir):
         FROM counts CROSS JOIN tot
     """,
     family="curation",
+    bnlj="1-row total count broadcast onto the leading-digit counts",
 )
 def dq_benford(spark, sf_dir):
     """Benford's-law audit on order totals: the leading-digit
@@ -1273,6 +1278,7 @@ def dq_benford(spark, sf_dir):
         )
     """,
     family="curation",
+    bnlj="1-row orphan count crossJoined onto the 1-row check frame",
 )
 def dq_expectations(spark, sf_dir):
     """Expectation-suite data-quality audit (the Great-Expectations /
@@ -1382,6 +1388,7 @@ _DSIR_KEEP_Q = 0.75  # admit the top quartile by importance score
         FROM scores s CROSS JOIN th t
     """,
     family="curation",
+    bnlj="1-row token total and 1-row score threshold crossJoined back",
 )
 def corpus_importance_resample(spark, sf_dir):
     """DSIR-style importance resampling (Xie et al. 2023, "Data

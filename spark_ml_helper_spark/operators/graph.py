@@ -327,10 +327,11 @@ _CC_SUPP_OFFSET = 1_000_000
 
 def _cooccur_edges(spark, sf_dir, min_cooccur=None):
     """Bidirectional customer-supplier co-occurrence edge list shared by
-    the community/traversal operators (label_prop, modularity, louvain,
-    bfs_layers, kcore): customers keep their key, suppliers shift by
-    _CC_SUPP_OFFSET, an edge exists when the pair co-occurs in >=
-    min_cooccur orders. localCheckpoint'ed because every caller fans the
+    the community/traversal operators (cc, label_prop, modularity,
+    louvain, bfs_layers, kcore) and bench.py's min-label instrument (so
+    it times the fixpoint, not the edge build): customers keep their
+    key, suppliers shift by _CC_SUPP_OFFSET, an edge exists when the
+    pair co-occurs in >= min_cooccur orders. localCheckpoint'ed because every caller fans the
     frame into multiple lineage branches (SCALE.md lesson 2)."""
     if min_cooccur is None:
         min_cooccur = _CC_MIN_COOCCUR
@@ -544,31 +545,6 @@ def _union_find_single_task(edges):
     return edges.coalesce(1).mapInPandas(uf, schema="node bigint, lab bigint")
 
 
-def cc_inputs(spark, sf_dir):
-    """Shared input builder for graph_cc and bench.py's per-round
-    min-label instrument: the bidirectional ≥ 4-co-occurrence
-    customer-supplier edge list, checkpointed. Factored in round 13 (the
-    sssp_inputs precedent) so the instrument times the FIXPOINT, not a
-    second copy of the edge build."""
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("o_custkey", "l_suppkey")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= _CC_MIN_COOCCUR)
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + _CC_SUPP_OFFSET).alias("s"),
-        )
-    )
-    return (
-        e0.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-        .unionByName(e0.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-
-
 @query(
     "graph_cc",
     oracle=f"""
@@ -610,7 +586,7 @@ def graph_cc(spark, sf_dir):
     dial (it bounds edge count and, at web scale, keeps hub vertices
     from gluing everything into one giant component). At extreme scale
     swap in large-star/small-star exactly as dedup_clusters documents."""
-    edges = cc_inputs(spark, sf_dir)
+    edges = _cooccur_edges(spark, sf_dir)
     labels, _ = min_label_fixpoint(edges)
     return labels.select("node", F.col("lab").alias("cluster_id"))
 
@@ -752,6 +728,7 @@ def graph_label_prop(spark, sf_dir):
         CROSS JOIN m2
     """,
     family="graph",
+    bnlj="1-row total edge weight broadcast onto the per-community sums",
 )
 def graph_modularity(spark, sf_dir):
     """Newman modularity of the connected-component partition of the

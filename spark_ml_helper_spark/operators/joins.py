@@ -126,6 +126,7 @@ def join_anti(spark, sf_dir):
         FROM customer JOIN nation ON c_nationkey = n_nationkey
     """,
     family="joins",
+    max_exchanges=0,  # THE broadcast demo: a shuffle defeats it
 )
 def join_broadcast(spark, sf_dir):
     """Explicitly-pinned broadcast join of a 25-row dim table (the hint is
@@ -146,6 +147,7 @@ def join_broadcast(spark, sf_dir):
         GROUP BY s_suppkey, s_name
     """,
     family="joins",
+    bnlj="the theta join is the operator; supplier side broadcast (100 rows at sf0.01)",
 )
 def join_range(spark, sf_dir):
     """Non-equi (theta/range) join: customers whose balance is within ±10 of
@@ -187,6 +189,7 @@ def join_range(spark, sf_dir):
         FROM ranked WHERE rn = 1
     """,
     family="joins",
+    max_exchanges=1,
 )
 def join_asof(spark, sf_dir):
     """AS-OF join (Spark has no native one): for each purchase, the latest
@@ -220,6 +223,7 @@ def join_asof(spark, sf_dir):
         FROM region a CROSS JOIN region b
     """,
     family="joins",
+    bnlj="the region x region cross join (5 x 5 rows) is the operator",
 )
 def join_cross(spark, sf_dir):
     """Cartesian product of two tiny dims (25 rows). Only ever legitimate
@@ -243,6 +247,7 @@ def join_cross(spark, sf_dir):
         LIMIT 10
     """,
     family="joins",
+    max_exchanges=1,
 )
 def join_multi(spark, sf_dir):
     """3-table star join (TPC-H Q3 shape): filter a dim, join two facts,
@@ -757,6 +762,7 @@ def join_range_banded(spark, sf_dir):
         FROM nav WHERE side = 1
     """,
     family="joins",
+    global_window="merge-pattern nearest join; scale path = value range-partition + seam replication",
 )
 def join_nearest_value(spark, sf_dir):
     """Nearest-value join: each supplier matched to the customer with

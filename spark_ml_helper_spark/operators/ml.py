@@ -97,6 +97,8 @@ def ml_logreg(spark, sf_dir):
         FROM (SELECT unnest(range(0, 8)) AS c) CROSS JOIN s
     """,
     family="ml",
+    bnlj="1-row variance stats broadcast onto the k=8 component rows",
+    global_window="lead/sum windows over the k=8 component frame (driver-local leaf)",
 )
 def ml_pca(spark, sf_dir):
     """PCA to 8 components over the embeddings — SQL-oracled (round 5,
@@ -378,6 +380,7 @@ def ml_cross_validate(spark, sf_dir):
         FROM ranked
     """,
     family="ml",
+    global_window="exact ROC rank-sum over distinct scores; scale path = binned AUC",
 )
 def ml_eval_auc(spark, sf_dir):
     """Exact distributed ROC-AUC via the Mann-Whitney rank statistic:
@@ -748,6 +751,7 @@ def ml_linreg_normal(spark, sf_dir):
         FROM resid
     """,
     family="ml",
+    bnlj="1-row fitted coefficients broadcast onto the rows",
 )
 def ml_eval_regression(spark, sf_dir):
     """Regression scoreboard (RMSE / MAE / R²) for the closed-form OLS
@@ -885,6 +889,7 @@ def ml_gbt(spark, sf_dir):
         GROUP BY bin
     """,
     family="ml",
+    global_window="exact quantile bins over distinct scores; scale path = approx bins",
 )
 def ml_eval_calibration(spark, sf_dir):
     """Calibration / reliability table for the same scorer ml_eval_auc
@@ -1264,7 +1269,10 @@ def _logreg_gd_oracle() -> str:
     """
 
 
-@query("ml_logreg_gd", oracle=_logreg_gd_oracle(), family="ml")
+@query(
+    "ml_logreg_gd", oracle=_logreg_gd_oracle(), family="ml",
+    bnlj="1-row metrics crossJoined onto the weight rows",
+)
 def ml_logreg_gd(spark, sf_dir):
     """Binary logistic regression by BATCH GRADIENT DESCENT on all 64
     embedding dimensions (label>=5 as the positive class), built from
@@ -1402,7 +1410,10 @@ def _als_rank1_oracle() -> str:
     """
 
 
-@query("ml_als_rank1", oracle=_als_rank1_oracle(), family="ml")
+@query(
+    "ml_als_rank1", oracle=_als_rank1_oracle(), family="ml",
+    bnlj="1-row RMSE crossJoined onto the item factors",
+)
 def ml_als_rank1(spark, sf_dir):
     """RANK-1 ALTERNATING LEAST SQUARES, fully oracle-verified — the
     deterministic twin of the rows-only MLlib ml_als, on the SAME
@@ -1557,7 +1568,10 @@ def _gbt_stumps_oracle() -> str:
     """
 
 
-@query("ml_gbt_stumps", oracle=_gbt_stumps_oracle(), family="ml")
+@query(
+    "ml_gbt_stumps", oracle=_gbt_stumps_oracle(), family="ml",
+    bnlj="1-row mean, best-split and RMSE frames crossJoined per boosting round",
+)
 def ml_gbt_stumps(spark, sf_dir):
     """GRADIENT BOOSTING with depth-1 trees, fully oracle-verified —
     the boosting half of the tree-twin story (ml_tree_stump verified
@@ -1818,7 +1832,10 @@ def _gmm_oracle() -> str:
     """
 
 
-@query("ml_gmm_em", oracle=_gmm_oracle(), family="ml")
+@query(
+    "ml_gmm_em", oracle=_gmm_oracle(), family="ml",
+    bnlj="1-row log-likelihood crossJoined onto the parameter rows",
+)
 def ml_gmm_em(spark, sf_dir):
     """Diagonal-covariance Gaussian-mixture EM (k=3 components over the
     first 4 embedding dims, 3 pinned rounds) built from engine

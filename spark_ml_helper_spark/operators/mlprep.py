@@ -23,6 +23,7 @@ from spark_ml_helper_spark.sources.parquet import table
         GROUP BY label
     """,
     family="mlprep",
+    bnlj="1-row total count crossJoined onto the per-label counts",
 )
 def class_balance(spark, sf_dir):
     """Label distribution (count + fraction of corpus) — the first thing a
@@ -79,6 +80,7 @@ def class_sample_stratified(spark, sf_dir):
         ) s
     """,
     family="mlprep",
+    bnlj="1-row min/max/mean stats crossJoined onto the customers",
 )
 def feature_scale(spark, sf_dir):
     """Z-score + min-max scaling (StandardScaler/MinMaxScaler equivalent,
@@ -127,6 +129,7 @@ def feature_bucketize(spark, sf_dir):
         FROM orders
     """,
     family="mlprep",
+    max_exchanges=0,  # map-side hash split: any shuffle is a bug
 )
 def train_test_split(spark, sf_dir):
     """Deterministic 80/20 split keyed on md5(key) — reproducible across
@@ -154,6 +157,7 @@ def train_test_split(spark, sf_dir):
         FROM t GROUP BY bucket
     """,
     family="mlprep",
+    global_window="exact ntile; scale path = approx_percentile cutpoints + width_bucket",
 )
 def feature_quantile_bucket(spark, sf_dir):
     """Equal-frequency (quantile) bucketing — QuantileDiscretizer
@@ -187,6 +191,7 @@ def feature_quantile_bucket(spark, sf_dir):
         FROM c, t
     """,
     family="mlprep",
+    bnlj="1-row total/class-count frame crossJoined onto the label counts",
 )
 def feature_class_weights(spark, sf_dir):
     """Balanced class weights (sklearn `class_weight='balanced'` formula:
@@ -393,6 +398,7 @@ _TE_SMOOTH = 20  # pseudo-count weight of the global prior
         GROUP BY p_brand, prior
     """,
     family="mlprep",
+    bnlj="1-row global prior broadcast onto the per-brand stats",
 )
 def feature_target_encode(spark, sf_dir):
     """Smoothed target (mean) encoding of a categorical feature: encode
@@ -499,6 +505,7 @@ def feature_winsorize(spark, sf_dir):
         GROUP BY n
     """,
     family="mlprep",
+    bnlj="1-row pair count broadcast onto the marginal and joint counts",
 )
 def feature_mutual_info(spark, sf_dir):
     """Mutual information between a categorical feature (document
@@ -580,6 +587,7 @@ def feature_mutual_info(spark, sf_dir):
         FROM g CROSS JOIN tot
     """,
     family="mlprep",
+    bnlj="1-row good/bad totals broadcast onto the per-category counts",
 )
 def feature_woe_iv(spark, sf_dir):
     """Weight of Evidence and Information Value of a categorical
@@ -683,6 +691,7 @@ def feature_crossed(spark, sf_dir):
         GROUP BY fold
     """,
     family="mlprep",
+    bnlj="1-row total broadcast onto the per-fold counts",
 )
 def ml_kfold_assign(spark, sf_dir):
     """Deterministic k-fold assignment (md5(id) mod 5) with the fold

@@ -360,6 +360,7 @@ def dedup_simhash(spark, sf_dir):
               / (len(a.bg) + len(b.bg) - len(list_intersect(a.bg, b.bg))) >= 0.5
     """,
     family="pipeline",
+    bnlj="G-row block-id spine (G=4) fanning set blocks into block pairs",
 )
 def dedup_ngram(spark, sf_dir):
     """Word-bigram Jaccard near-dup pairs (≥ 0.5): order-sensitive token
@@ -415,6 +416,7 @@ _DUCK_NORM = "sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * x)))"
         WHERE {_DUCK_DOT.format(a='a.embedding', b='b.embedding')} / (a.nrm * b.nrm) >= 0.4
     """,
     family="pipeline",
+    bnlj="G-row block-id spine (G=8) fanning vector blocks into block pairs",
 )
 def dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-dup pairs (sim ≥ 0.4): semantic dedup — the
@@ -485,6 +487,7 @@ def dedup_embedding(spark, sf_dir):
         ) WHERE rn <= 5
     """,
     family="pipeline",
+    bnlj="1-row broadcast cell-centroid array for map-side cell assignment",
 )
 def sim_ann_ivf(spark, sf_dir):
     """IVF approximate nearest neighbors: coarse-quantize every vector to
@@ -610,6 +613,7 @@ def sim_ann_ivf(spark, sf_dir):
         LIMIT 5
     """,
     family="pipeline",
+    bnlj="1-row query norm broadcast onto the per-doc scores",
 )
 def pipeline_retrieval(spark, sf_dir):
     """End-to-end lexical retrieval pipeline — the BM25-lite/RAG-
@@ -747,6 +751,7 @@ def pipeline_retrieval(spark, sf_dir):
                CAST(coalesce(sum(n_tokens) FILTER (budget_keep), 0) AS BIGINT) FROM flags
     """,
     family="pipeline",
+    global_window="corpus_token_budget's budget window, composed per stage",
 )
 def pipeline_pretrain_report(spark, sf_dir):
     """END-TO-END PRETRAIN CURATION FUNNEL in one plan — the composed

@@ -116,6 +116,7 @@ def join_skew_salted(spark, sf_dir):
         GROUP BY o.o_orderkey, o.o_totalprice
     """,
     family="scale",
+    max_exchanges=0,  # zero-Exchange is this operator's contract
 )
 def join_bucketed(spark, sf_dir):
     """Co-located bucketed join: both sides written bucketBy(8, key) into
@@ -489,6 +490,7 @@ _SKEW_TOP_K = 10
         LIMIT {_SKEW_TOP_K}
     """,
     family="scale",
+    bnlj="1-row total broadcast onto the per-key counts",
 )
 def profile_skew(spark, sf_dir):
     """Join-key skew profiler: the diagnostic you run BEFORE a 100 TB

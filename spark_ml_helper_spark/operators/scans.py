@@ -35,6 +35,7 @@ def scan_parquet(spark, sf_dir):
         WHERE o_totalprice > 200000.0
     """,
     family="scans",
+    max_exchanges=0,
 )
 def scan_pruned(spark, sf_dir):
     """Column-pruned + predicate-pushed scan: only 2 of 6 columns read, and
@@ -71,6 +72,7 @@ def sink_parquet(spark, sf_dir):
         FROM events
     """,
     family="scans",
+    max_exchanges=0,  # map-side JSON extraction
 )
 def source_json_col(spark, sf_dir):
     """Parse a JSON-encoded string column (events.props = '{"k": <int>}').

@@ -23,6 +23,7 @@ from spark_ml_helper_spark.sources.parquet import table
         FROM customer
     """,
     family="setops",
+    global_window="total order is the contract (rank column demo)",
 )
 def sort_multi(spark, sf_dir):
     """Multi-key mixed-direction global sort, materialized as an explicit

@@ -70,6 +70,7 @@ def text_ngrams(spark, sf_dir):
         GROUP BY token
     """,
     family="text",
+    max_exchanges=1,
 )
 def text_wordcount(spark, sf_dir):
     """Corpus term frequencies (explode → hash agg; the shuffle carries one
@@ -119,6 +120,7 @@ def text_stats(spark, sf_dir):
         FROM tf JOIN dft ON tf.term = dft.term CROSS JOIN n
     """,
     family="text",
+    bnlj="1-row doc count crossJoined onto the term frequencies",
 )
 def text_tfidf(spark, sf_dir):
     """Exact TF-IDF per (doc, term): tf · (ln((N+1)/(df+1)) + 1) — smoothed
@@ -153,6 +155,7 @@ def text_tfidf(spark, sf_dir):
         GROUP BY text
     """,
     family="text",
+    max_exchanges=1,
 )
 def dedup_exact(spark, sf_dir):
     """Exact text dedup: group identical texts, keep the min doc_id.
@@ -939,6 +942,7 @@ def text_stopfilter(spark, sf_dir):
         SELECT doc_id, rnk, term, score FROM ranked WHERE rnk <= 3
     """,
     family="text",
+    bnlj="1-row doc count crossJoined onto the term frequencies",
 )
 def text_keywords_tfidf(spark, sf_dir):
     """Top-3 TF-IDF keywords per document — the keyword-extraction

@@ -124,6 +124,7 @@ _EPOCH = "TIMESTAMP '2024-01-01'"
         FROM filled
     """,
     family="timeseries",
+    bnlj="hourly time spine (720 rows) crossJoined with the event types",
 )
 def ts_interpolate(spark, sf_dir):
     """Linear interpolation over a sparse hourly series: the mean `value`
@@ -776,6 +777,7 @@ def ts_twa(spark, sf_dir):
         FROM mr CROSS JOIN lims
     """,
     family="timeseries",
+    bnlj="1-row control limits broadcast onto the moving ranges",
 )
 def ts_control_chart(spark, sf_dir):
     """XmR (individuals & moving-range) control chart on the daily
@@ -833,6 +835,7 @@ def ts_control_chart(spark, sf_dir):
         FROM slopes
     """,
     family="timeseries",
+    bnlj="Theil-Sen pair self-join of the 30-row daily frame",
 )
 def ts_trend_robust(spark, sf_dir):
     """Theil–Sen robust trend: the MEDIAN of all pairwise slopes of
@@ -1041,6 +1044,7 @@ def ts_max_drawdown(spark, sf_dir):
         FROM resid
     """,
     family="timeseries",
+    bnlj="1-row global totals broadcast onto the hourly residuals",
 )
 def ts_seasonality_strength(spark, sf_dir):
     """Seasonality STRENGTH: the share of hourly-count variance

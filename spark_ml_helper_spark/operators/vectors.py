@@ -42,6 +42,7 @@ def _norms(spark, sf_dir):
         LIMIT 10
     """,
     family="vectors",
+    bnlj="G-row block-id spine (G=8) fanning vector blocks into block pairs",
 )
 def sim_cosine_pairs(spark, sf_dir):
     """Top-10 most cosine-similar vector pairs (exact, all-pairs) via a
@@ -98,6 +99,7 @@ def sim_cosine_pairs(spark, sf_dir):
         ) WHERE rn <= 5
     """,
     family="vectors",
+    bnlj="50 query vectors broadcast, scored against the candidates",
 )
 def sim_knn(spark, sf_dir):
     """Exact k-NN (k=5, cosine) for the first 50 query vectors against the
@@ -445,6 +447,7 @@ def vec_centroids(spark, sf_dir):
         ) WHERE vr = 1
     """,
     family="vectors",
+    bnlj="50 query vectors broadcast, scored against the corpus (exclude-self join)",
 )
 def knn_classify(spark, sf_dir):
     """k-NN majority-vote classification (k=5) with deterministic
@@ -539,6 +542,7 @@ def multimodal_join(spark, sf_dir):
         ) WHERE rn = 1
     """,
     family="vectors",
+    bnlj="100 anchor vectors broadcast, joined on label inequality",
 )
 def sim_hard_negatives(spark, sf_dir):
     """Hard-negative mining for contrastive training: for each anchor
@@ -608,6 +612,7 @@ def sim_hard_negatives(spark, sf_dir):
         FROM firsthit
     """,
     family="vectors",
+    bnlj="100 query vectors broadcast, scored against the corpus (exclude-self join)",
 )
 def ml_eval_retrieval(spark, sf_dir):
     """Embedding-space retrieval evaluation: for each query vector (first
@@ -743,6 +748,7 @@ _DECON_TAU = 0.35
         GROUP BY vec_id
     """,
     family="corpus",
+    bnlj="benchmark embeddings (6 rows) broadcast against train on a cosine threshold",
 )
 def corpus_decontaminate_semantic(spark, sf_dir):
     """Semantic benchmark decontamination — the embedding-space
@@ -795,6 +801,7 @@ def corpus_decontaminate_semantic(spark, sf_dir):
         FROM sims GROUP BY bucket
     """,
     family="vectors",
+    bnlj="a_id < b_id self-join of the 100-vector md5 sample",
 )
 def sim_threshold_sweep(spark, sf_dir):
     """Similarity-threshold calibration: histogram of pairwise cosine over
@@ -963,6 +970,7 @@ def vec_dim_stats(spark, sf_dir):
         GROUP BY bucket
     """,
     family="vectors",
+    bnlj="a_id < b_id self-join of the 100-vector md5 sample",
 )
 def vec_pairwise_dist_hist(spark, sf_dir):
     """Pairwise-distance histogram over a deterministic 100-vector
@@ -1077,6 +1085,7 @@ def dedup_embedding_exact(spark, sf_dir):
         FROM base CROSS JOIN norms CROSS JOIN dims
     """,
     family="vectors",
+    bnlj="1-row norm and dimension stats broadcast onto the vectors",
 )
 def pipeline_embedding_qc(spark, sf_dir):
     """One-row embedding-table QC gate — the composite report a
@@ -1168,6 +1177,7 @@ _DUCK_NORM16 = "sqrt(list_sum(list_transform({a}[1:16], x -> CAST(x AS DOUBLE) *
         GROUP BY f.q_id
     """,
     family="vectors",
+    bnlj="50 query vectors broadcast, scored against the candidates (exclude-self)",
 )
 def vec_matryoshka_eval(spark, sf_dir):
     """Matryoshka-style truncation evaluation: for 50 query vectors,
@@ -1354,6 +1364,7 @@ _DUCK_SQDIST = (
         GROUP BY li
     """,
     family="vectors",
+    bnlj="i != j self-join of the 200-vector md5 sample",
 )
 def vec_silhouette(spark, sf_dir):
     """Silhouette score of the LABEL partition over a deterministic
@@ -1445,6 +1456,7 @@ def vec_silhouette(spark, sf_dir):
         FROM means
     """,
     family="vectors",
+    bnlj="i < j self-join of the 200-vector md5 sample",
 )
 def vec_energy_distance(spark, sf_dir):
     """Two-sample ENERGY DISTANCE between embedding batches
@@ -1574,7 +1586,10 @@ def _pca_oracle() -> str:
     """
 
 
-@query("vec_pca_power", oracle=_pca_oracle(), family="vectors")
+@query(
+    "vec_pca_power", oracle=_pca_oracle(), family="vectors",
+    bnlj="1-row norm broadcast per power round",
+)
 def vec_pca_power(spark, sf_dir):
     """Top principal component by POWER ITERATION, fully
     oracle-verified — the eigenvector MLlib's ml_pca computes as an
@@ -1847,7 +1862,10 @@ def _km_train(spark, sf_dir):
     return pts, cent, assign(cent)
 
 
-@query("vec_kmeans_lloyd", oracle=_kmeans_oracle(), family="vectors")
+@query(
+    "vec_kmeans_lloyd", oracle=_kmeans_oracle(), family="vectors",
+    bnlj="1-row codebook array for map-side nearest-centroid assignment",
+)
 def vec_kmeans_lloyd(spark, sf_dir):
     """Seeded Lloyd k-means (k=8, 5 rounds) built from engine
     primitives and fully ORACLE-VERIFIED — the deterministic twin of
@@ -1930,7 +1948,10 @@ def _semdedup_oracle() -> str:
     """
 
 
-@query("dedup_semantic", oracle=_semdedup_oracle(), family="vectors")
+@query(
+    "dedup_semantic", oracle=_semdedup_oracle(), family="vectors",
+    bnlj="1-row Lloyd codebook array and the G=8 block-id spine",
+)
 def dedup_semantic(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication that restricts the quadratic cosine search to k-means
@@ -2185,7 +2206,10 @@ def _pq_train(spark, sf_dir):
     return pts, cent, final
 
 
-@query("vec_pq_encode", oracle=_pq_oracle(), family="vectors")
+@query(
+    "vec_pq_encode", oracle=_pq_oracle(), family="vectors",
+    bnlj="1-row corpus MSE crossJoined onto the codes",
+)
 def vec_pq_encode(spark, sf_dir):
     """PRODUCT QUANTIZATION (Jégou et al., PAMI 2011): split the 64-dim
     embedding into 8 subspaces of 8 dims, train a 4-centroid codebook
@@ -2396,7 +2420,10 @@ def _kmeans_elbow_oracle() -> str:
     """
 
 
-@query("vec_kmeans_elbow", oracle=_kmeans_elbow_oracle(), family="vectors")
+@query(
+    "vec_kmeans_elbow", oracle=_kmeans_elbow_oracle(), family="vectors",
+    bnlj="4-row config frame and the vec_id < cfg seed join",
+)
 def vec_kmeans_elbow(spark, sf_dir):
     """ELBOW CURVE for k selection — Lloyd k-means at k ∈ {1,2,4,8}
     trained SIMULTANEOUSLY in one plan: centroids key on
@@ -2883,7 +2910,10 @@ def ivfpq_probe(index, queries):
     )
 
 
-@query("sim_ann_ivfpq", oracle=_ivfpq_oracle(), family="vectors")
+@query(
+    "sim_ann_ivfpq", oracle=_ivfpq_oracle(), family="vectors",
+    bnlj="1-row broadcast codebook array for map-side cell assignment",
+)
 def sim_ann_ivfpq(spark, sf_dir):
     """IVF×PQ — the billion-vector ANN default (FAISS IVFADC: Jégou et
     al., PAMI 2011 §V), composed from three already-oracle-verified
@@ -3032,7 +3062,10 @@ def _pca_deflate_oracle() -> str:
     """
 
 
-@query("vec_pca_deflate", oracle=_pca_deflate_oracle(), family="vectors")
+@query(
+    "vec_pca_deflate", oracle=_pca_deflate_oracle(), family="vectors",
+    bnlj="1-row eigenvalue/trace and norm broadcasts per power round",
+)
 def vec_pca_deflate(spark, sf_dir):
     """TOP-2 principal components by POWER ITERATION WITH DEFLATION —
     executing the 'more dimensions = repeat with deflation' path the

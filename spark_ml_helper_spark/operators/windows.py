@@ -157,6 +157,7 @@ def win_range_frame(spark, sf_dir):
         ) WHERE rn <= 3
     """,
     family="windows",
+    max_exchanges=1,
 )
 def win_topk_group(spark, sf_dir):
     """Top-3 orders per customer (the grouped top-k idiom: window + filter;
@@ -192,6 +193,7 @@ def win_topk_group(spark, sf_dir):
         FROM flagged
     """,
     family="windows",
+    max_exchanges=1,
 )
 def win_sessionize(spark, sf_dir):
     """Gap-based sessionization (batch twin of stream_session): a ≥10-min
@@ -448,6 +450,7 @@ def win_time_range_frame(spark, sf_dir):
         WHERE best_bal_before IS NULL OR bal_c > best_bal_before
     """,
     family="windows",
+    global_window="skyline running-max over the per-customer aggregate (unique-key join)",
 )
 def win_pareto_frontier(spark, sf_dir):
     """Skyline / Pareto-frontier query: customers not DOMINATED on the

@@ -1,10 +1,14 @@
-"""Physical-plan inspection utilities.
+"""Physical-plan inspection utilities and the plan-contract check.
 
 The engine's scale posture (pushdown reaches the scan, dims broadcast,
 aggs have partial phases, no accidental nested-loop joins) is a property
 of the PLAN, not of any test dataset — these helpers extract that
-evidence from a DataFrame so tests and tools can assert it. Used by the
-CI plan audit (tests/test_pipeline.py) and `python -m tools.plan_report`.
+evidence from a DataFrame so tests and tools can assert it. Each query
+declares the plan shapes it is allowed on its ``@query`` registration
+(``bnlj``, ``global_window``, ``max_exchanges``); `contract_violations`
+checks one plan against that declaration. Used by the CI plan audit
+(tests/test_pipeline.py, over PLAN_AUDIT_FAMILIES) and by
+`python -m tools.plan_audit` (every registered query).
 """
 
 from __future__ import annotations
@@ -12,6 +16,21 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
+
+#: Families whose plans CI builds: plan construction there is plan
+#: inspection, not minutes of work. Left out: graph/ml/streaming/scale,
+#: where building a plan runs fixpoints, MLlib fits or stream runs —
+#: `python -m tools.plan_audit` sweeps those with the rest.
+PLAN_AUDIT_FAMILIES = frozenset({
+    "joins", "aggregates", "windows", "setops", "analytics", "timeseries",
+    "mlprep", "sqlapi", "filters", "scans", "reshape", "vectors",
+    "corpus", "curation", "text", "functions", "pipeline",
+    "multimodal", "sources", "udfs",
+})
+
+
+def _plan_text(df_or_plan) -> str:
+    return df_or_plan if isinstance(df_or_plan, str) else explain_formatted(df_or_plan)
 
 
 def explain_formatted(df: DataFrame) -> str:
@@ -21,8 +40,9 @@ def explain_formatted(df: DataFrame) -> str:
     )
 
 
-def plan_summary(df: DataFrame) -> dict:
-    """One-line health summary of a DataFrame's physical plan.
+def plan_summary(df_or_plan) -> dict:
+    """One-line health summary of a physical plan (a DataFrame or its
+    formatted plan text).
 
     Keys: exchanges (shuffle boundaries), reused_exchanges,
     broadcast_joins / sortmerge_joins / nested_loop_joins /
@@ -31,7 +51,7 @@ def plan_summary(df: DataFrame) -> dict:
     codegen_spans (WholeStageCodegen regions), parquet_scans, and
     scans_with_pushdown (scans whose PushedFilters is non-empty).
     """
-    plan = explain_formatted(df)
+    plan = _plan_text(df_or_plan)
     # count TREE nodes "(n) Op", not the details section that repeats
     # each operator name as a header. Node names are matched by PREFIX:
     # a catalog-qualified scan renders as e.g.
@@ -271,11 +291,7 @@ def global_window_risks(df_or_plan) -> list:
     Unresolvable reuse (missing detail line, cycle) stays non-reduced —
     the conservative direction: the detector may flag, never silently
     pass, such plans."""
-    plan = (
-        df_or_plan
-        if isinstance(df_or_plan, str)
-        else explain_formatted(df_or_plan)
-    )
+    plan = _plan_text(df_or_plan)
     nodes = parse_plan_tree(plan)
     global_ids = _global_window_ids(plan)
     reuse = _reuse_referents(plan)
@@ -293,9 +309,27 @@ def global_window_risks(df_or_plan) -> list:
     return risks
 
 
-def has_nested_loop(df: DataFrame) -> bool:
-    return "BroadcastNestedLoopJoin" in explain_formatted(df)
-
-
-def has_cartesian(df: DataFrame) -> bool:
-    return "CartesianProduct" in explain_formatted(df)
+def contract_violations(spec, plan: str) -> list[str]:
+    """Where ``plan`` breaks the contract ``spec`` (a registry QuerySpec)
+    declares, one ``"<property>: <finding>"`` string each; [] is a clean
+    plan. A BroadcastNestedLoopJoin or a global window over a non-reduced
+    input needs a declared reason, and a declared one must still be
+    planned — a stale declaration would hide the next, non-tiny one. A
+    CartesianProduct in PLAN_AUDIT_FAMILIES is always a defect (outside
+    them, MLlib's blocked ALS recommender plans one by design)."""
+    s = plan_summary(plan)
+    out = []
+    if s["nested_loop_joins"] and not spec.bnlj:
+        out.append("bnlj: undeclared BroadcastNestedLoopJoin")
+    if spec.bnlj and not s["nested_loop_joins"]:
+        out.append("bnlj: declared, but no BroadcastNestedLoopJoin planned")
+    if s["cartesian_products"] and spec.family in PLAN_AUDIT_FAMILIES:
+        out.append("cartesian: CartesianProduct")
+    risky = bool(global_window_risks(plan))
+    if risky and not spec.global_window:
+        out.append("global_window: undeclared global window over non-reduced input")
+    if spec.global_window and not risky:
+        out.append("global_window: declared, but no global window planned")
+    if spec.max_exchanges is not None and s["exchanges"] > spec.max_exchanges:
+        out.append(f"max_exchanges: {s['exchanges']} over {spec.max_exchanges}")
+    return out

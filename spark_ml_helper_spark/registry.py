@@ -29,14 +29,34 @@ class QuerySpec:
     oracle: Optional[str]  # DuckDB SQL; None → driver records rows-only check
     family: str = ""
     doc: str = ""
+    # Plan contract (checked by the plan audit, plans/audit.py): a
+    # one-line reason per allowed plan shape, and an exchange budget.
+    bnlj: str = ""
+    global_window: str = ""
+    max_exchanges: Optional[int] = None
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: Optional[str] = None, family: str = "") -> Callable[[QueryFn], QueryFn]:
+def query(
+    name: str,
+    oracle: Optional[str] = None,
+    family: str = "",
+    *,
+    bnlj: str = "",
+    global_window: str = "",
+    max_exchanges: Optional[int] = None,
+) -> Callable[[QueryFn], QueryFn]:
     """Register an operator. ``oracle=None`` marks a rows-only (non-SQL-
-    expressible or approximate) operator."""
+    expressible or approximate) operator.
+
+    The plan contract sits next to the code it describes: ``bnlj`` says
+    why the plan may (and must) hold a BroadcastNestedLoopJoin (a
+    constant-size build side), ``global_window`` why an unpartitioned
+    window over a non-reduced input is the semantic, each in one line
+    (the docstring prices the scale path); ``max_exchanges`` is the
+    plan's shuffle budget."""
 
     def deco(fn: QueryFn) -> QueryFn:
         # A duplicate name would silently shadow an earlier operator (plain
@@ -44,7 +64,10 @@ def query(name: str, oracle: Optional[str] = None, family: str = "") -> Callable
         # so make it loud at import time.
         if name in REGISTRY:
             raise ValueError(f"duplicate query registration: {name!r}")
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, family=family, doc=fn.__doc__ or "")
+        REGISTRY[name] = QuerySpec(
+            name=name, fn=fn, oracle=oracle, family=family, doc=fn.__doc__ or "",
+            bnlj=bnlj, global_window=global_window, max_exchanges=max_exchanges,
+        )
         return fn
 
     return deco

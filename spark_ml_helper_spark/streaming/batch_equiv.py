@@ -76,6 +76,7 @@ STATIC_JOIN_ORACLE = """
     "stream_tumbling",
     oracle=TUMBLING_ORACLE,
     family="streaming",
+    max_exchanges=1,
 )
 def stream_tumbling(spark, sf_dir):
     """1-hour tumbling window counts/sums per event type (batch twin of the

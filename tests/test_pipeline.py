@@ -1747,70 +1747,6 @@ def test_active_users_monotone_and_bounded(spark):
     assert rows[-1]["mau"] >= rows[0]["mau"]  # window only grows early on
 
 
-# Queries whose plan legitimately contains a BroadcastNestedLoopJoin: every
-# one is a crossJoin/broadcast of a TINY stat or spine frame (a 1-row global
-# aggregate, percentile cutpoints, an hour spine, a G-row marginal table) —
-# constant-size at any corpus scale. A NEW name appearing here means an
-# operator grew an unplanned non-equi join; run tools/plan_audit.py to see
-# the full-registry picture. Round 13: the TINY claim is MEASURED from the
-# executed plans (tools/bnlj_volume_report reads the build-side
-# BroadcastExchange's row metric): registry-wide max build frame is 720
-# rows at sf0.01 / 1,000 at sf0.1 (time spine / value-band spine), runtime
-# CI pin in test_bnlj_build_side_is_tiny_at_runtime.
-_BNLJ_ALLOWED = {
-    "abc_analysis", "agg_heavy_hitters",
-    "basket_lift", "class_balance", "corpus_bigram_lm",
-    "corpus_decontaminate_semantic", "corpus_mix_weights",
-    "dedup_containment", "dedup_embedding", "dedup_ngram",
-    "events_active_users", "events_growth_accounting",
-    "events_hazard_rate", "events_heatmap_hour_dow",
-    "events_peak_concurrency", "orders_return_rate",
-    "orders_revenue_bridge", "orders_whale_concentration", "vec_pca_power",
-    "vec_pca_deflate",  # same 1-row eigenvalue/trace broadcasts as pca_power
-    "vec_kmeans_lloyd", "vec_pq_encode",
-    "sim_ann_ivfpq",  # 1-row broadcast codebook array for map-side cell assignment
-    "dedup_semantic",  # same 1-row Lloyd codebook broadcast as vec_kmeans_lloyd
-    # 4-row config frame + seed join on vec_id < cfg — constant-size
-    # broadcasts at any scale
-    "vec_kmeans_elbow",
-    "rollup_ytd",
-    "events_survival_curve",
-    "stats_anova", "stats_bootstrap_ci", "stats_chi2", "stats_ks_test",
-    "stats_simpson_check",
-    "stats_ttest_welch", "ts_seasonality_strength",
-    "vec_energy_distance", "vec_matryoshka_eval", "vec_pairwise_dist_hist",
-    "vec_silhouette",
-    "pipeline_embedding_qc", "stats_srm_check", "stats_power_mde",
-    "text_burstiness", "text_heaps_law", "ml_kfold_assign",
-    "feature_class_weights", "feature_mutual_info",
-    "feature_scale", "feature_target_encode", "feature_woe_iv",
-    "funnel_ordered",
-    "graph_modularity", "join_cross", "join_range", "knn_classify",
-    "ml_eval_retrieval", "pipeline_daily_kpis", "profile_skew",
-    "rfm_segments", "sim_ann_ivf",
-    "sim_cosine_pairs", "sim_hard_negatives", "sim_knn",
-    "sim_threshold_sweep", "text_collocations", "text_tfidf",
-    "text_unigram_logprob", "text_vocab_prune", "ts_gap_fill",
-    "ts_interpolate",
-    # tiny-frame broadcasts added round 4 session 3: 1-row limit/total
-    # aggregates or ≤30-row self-joins, constant-size at any scale
-    "agg_histogram_equiwidth", "agg_weighted_median",
-    "ts_control_chart", "ts_trend_robust",
-    # 1-row bits-set count crossJoined onto the 1-row report
-    "agg_bloom_filter",
-    # 1-row exact-count frame crossJoined onto the 1-row estimate
-    "agg_hll_manual",
-    # r12: grand total as a 1-row aggregate broadcast-joined back —
-    # replaced the unpartitioned sum window (global-window audit fix)
-    "agg_ratio_to_report",
-}
-# fast, declarative families — plan construction triggers no jobs here
-_AUDIT_FAMILIES = {
-    "joins", "aggregates", "windows", "setops", "analytics", "timeseries",
-    "mlprep", "sqlapi", "filters", "scans", "reshape", "vectors",
-}
-
-
 def test_argmin_assignment_is_map_side(spark):
     # round-7 refactor lock-in: Lloyd/PQ/IVF nearest-centroid assignment
     # must stay a map-side array_min over a broadcast codebook array —
@@ -1825,116 +1761,58 @@ def test_argmin_assignment_is_map_side(spark):
         assert "Window" not in plan, f"{name}: argmin regressed to a window plan"
 
 
-def test_plan_audit_no_new_nested_loops(spark):
+@pytest.fixture(scope="module")
+def audit_plans(spark):
+    """Formatted plan of every query CI audits — PLAN_AUDIT_FAMILIES plus
+    each query declaring a plan contract — built once for the three
+    audit tests below."""
+    from spark_ml_helper_spark.plans.audit import PLAN_AUDIT_FAMILIES, explain_formatted
     from spark_ml_helper_spark.registry import REGISTRY
 
-    from spark_ml_helper_spark.plans.audit import explain_formatted
-
-    bnlj, cart = [], []
-    for name, spec in REGISTRY.items():
-        if spec.family not in _AUDIT_FAMILIES:
-            continue
-        df = spec.fn(spark, SF_ORACLE)
-        plan = explain_formatted(df)
-        if "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_ALLOWED:
-            bnlj.append(name)
-        if "CartesianProduct" in plan:
-            cart.append(name)
-    assert not bnlj, f"new BroadcastNestedLoopJoin in: {bnlj}"
-    assert not cart, f"CartesianProduct (always a defect here) in: {cart}"
+    return {
+        name: explain_formatted(spec.fn(spark, SF_ORACLE))
+        for name, spec in REGISTRY.items()
+        if spec.family in PLAN_AUDIT_FAMILIES
+        or spec.bnlj
+        or spec.global_window
+        or spec.max_exchanges is not None
+    }
 
 
-# Documented-trade sites where a global (unpartitioned, ordered) window
-# over a non-reduced frame is the SEMANTIC — each docstring states the
-# exactness/scale trade and names the scale-path alternative. Round 13:
-# every claim below is now MEASURED (tools/window_volume_report reads
-# each executed Window node's input rows from the per-node SQLMetrics;
-# numbers at sf0.01/sf0.1 in its docstring): ml_pca's windows see 8/8
-# rows (input-independent), auc/calibration 500/2,000 (distinct-score,
-# sub-linear), pareto 1,500/14,999 (group cardinality), and the
-# full-stream trades sit at exactly their declared table cardinality
-# (largest: feature_quantile_bucket at orders, 150k @ sf0.1).
-#   sort_multi               total order IS the contract; rank column demo
-#   feature_quantile_bucket  exact ntile; scale path = approx_percentile
-#                            cutpoints + width_bucket (shuffle-free)
-#   join_nearest_value       merge-pattern nearest join; scale path =
-#                            range-partition by value + seam replication
-#   corpus_pack_sequences    global token cumsum; scale path = per-shard
-#                            packing with chained shard offsets
-#   ml_eval_auc              exact ROC rank-sum; scale path = binned AUC
-#   ml_eval_calibration      exact quantile bins; scale path = approx bins
-#   win_pareto_frontier      skyline running-max over the per-customer
-#                            frame; the inner join on spend's UNIQUE group
-#                            key bounds the window input to aggregate
-#                            cardinality, which the r13 leaf-domination
-#                            rule cannot see (key-uniqueness reasoning);
-#                            scale path = range-partitioned runs + merged
-#                            per-partition frontiers (docstring)
-#   corpus_token_budget      global quality-rank token cumsum; the old
-#                            any-node rule was BLIND to it (the 1-row
-#                            broadcast total vouched for the full doc
-#                            stream — exactly the r13 FN class); scale
-#                            path = quality-bucket histograms +
-#                            per-bucket budgets (docstring)
-#   pipeline_pretrain_report same budget window as its standalone stage
-#                            (corpus_token_budget), composed; same scale
-#                            path per stage (docstring)
-#   ml_pca                   lead/sum windows over the 8-row component
-#                            frame (bounded by construction: k=8); one
-#                            leaf is a driver-local createDataFrame the
-#                            detector cannot size — 'Scan ExistingRDD'
-#                            is also how corpus-sized localCheckpoints
-#                            render, so leaf-typing it as bounded would
-#                            trade this FP for real FNs
-# Everything else must keep windows partitioned or inputs reduced
-# (aggregate/limit DOMINATING every leaf below — r13: a reducing node on
-# one join branch no longer vouches for the other branch's probe
-# stream) — the vec_pairwise_dist_hist round-11 defect class. The sweep
-# over ALL families runs in tools/plan_audit.py.
-_GLOBAL_WINDOW_ALLOWED = {
-    "sort_multi", "feature_quantile_bucket", "join_nearest_value",
-    "corpus_pack_sequences", "ml_eval_auc", "ml_eval_calibration",
-    "win_pareto_frontier", "corpus_token_budget",
-    "pipeline_pretrain_report", "ml_pca",
-}
-
-# The global-window sweep covers MORE families than the BNLJ sweep
-# (r13: corpus_token_budget's FN hid in a family CI never swept).
-# Still excluded: graph/ml/streaming/scale, whose plan CONSTRUCTION
-# executes fixpoints / MLlib fits / stream runs (minutes, not plan
-# inspection) — those are swept per-round by tools/plan_audit.py over
-# the whole registry.
-_GLOBAL_WINDOW_FAMILIES = _AUDIT_FAMILIES | {
-    "corpus", "curation", "text", "functions", "pipeline",
-    "multimodal", "sources", "udfs",
-}
-
-
-def test_plan_audit_no_new_global_windows(spark):
-    from spark_ml_helper_spark.plans.audit import global_window_risks
+def _contract_violations(plans, *props):
+    """{name: findings} for the given contract properties (see
+    plans.audit.contract_violations)."""
+    from spark_ml_helper_spark.plans.audit import contract_violations
     from spark_ml_helper_spark.registry import REGISTRY
 
-    risky = []
-    for name, spec in REGISTRY.items():
-        if spec.family not in _GLOBAL_WINDOW_FAMILIES:
-            continue
-        if name in _GLOBAL_WINDOW_ALLOWED:
-            continue
-        if global_window_risks(spec.fn(spark, SF_ORACLE)):
-            risky.append(name)
-    assert not risky, (
-        f"global window over non-reduced input (single-task sort at "
-        f"scale) in: {risky} — partition the window, reduce its input, "
-        f"or document the trade and add to _GLOBAL_WINDOW_ALLOWED"
+    out = {}
+    for name, plan in plans.items():
+        found = [f for f in contract_violations(REGISTRY[name], plan) if f.split(":")[0] in props]
+        if found:
+            out[name] = found
+    return out
+
+
+def test_plan_audit_no_new_nested_loops(audit_plans):
+    # A nested-loop join is legitimate only over a constant-size
+    # stat/spine frame, declared with @query(bnlj="...");
+    # tools/bnlj_volume_report measures the build sides and
+    # test_bnlj_build_side_is_tiny_at_runtime pins two at runtime.
+    bad = _contract_violations(audit_plans, "bnlj", "cartesian")
+    assert not bad, (
+        f"nested-loop contract broken: {bad} — drop the non-equi join, or "
+        f"declare bnlj= on a constant-size build side (remove a stale one)"
     )
-    # the whitelist stays honest: the documented-trade sites really do
-    # carry the global window they claim (drop them from the list the
-    # day their plans stop needing it)
-    for name in sorted(_GLOBAL_WINDOW_ALLOWED):
-        assert global_window_risks(REGISTRY[name].fn(spark, SF_ORACLE)), (
-            f"{name} no longer plans a global window — remove it from "
-            f"_GLOBAL_WINDOW_ALLOWED"
-        )
+
+
+def test_plan_audit_no_new_global_windows(audit_plans):
+    # A global window over a non-reduced frame is a single-task sort at
+    # scale (the vec_pairwise_dist_hist round-11 defect class):
+    # partition it, reduce its input, or declare the documented trade
+    # with @query(global_window="..."); tools/window_volume_report
+    # measures the declared sites.
+    bad = _contract_violations(audit_plans, "global_window")
+    assert not bad, f"global-window contract broken: {bad}"
 
 
 def test_min_label_distributed_equals_union_find(spark):
@@ -4144,36 +4022,11 @@ def test_single_batch_premise_rejects_truncated_progress():
         _assert_single_input_batch([])
 
 
-# Shuffle budget per headline query: the exchange count each plan is
-# ALLOWED — a new Exchange (lost broadcast, extra repartition, lost
-# bucketing) fails here before it ever shows up in the bench numbers.
-_EXCHANGE_BUDGET = {
-    "agg_group": 2,          # partial→final agg + output sort
-    "join_multi": 1,         # dims broadcast; one agg shuffle
-    "win_topk_group": 1,     # one window shuffle
-    "join_asof": 1,          # one union-merge window shuffle
-    "stream_tumbling": 1,
-    "win_sessionize": 1,
-    "text_wordcount": 1,
-    "train_test_split": 0,   # map-side hash split — any shuffle is a bug
-    "source_json_col": 0,    # map-side JSON extraction
-    "dedup_exact": 1,
-    "join_broadcast": 0,     # THE broadcast demo — a shuffle defeats it
-    "scan_pruned": 0,
-    "join_bucketed": 0,      # zero-Exchange is this operator's contract
-}
-
-
-def test_headline_exchange_budgets(spark):
-    from spark_ml_helper_spark.plans.audit import plan_summary
-    from spark_ml_helper_spark.registry import REGISTRY
-
-    over = {}
-    for name, budget in _EXCHANGE_BUDGET.items():
-        s = plan_summary(REGISTRY[name].fn(spark, SF_ORACLE))
-        if s["exchanges"] > budget:
-            over[name] = (s["exchanges"], budget)
-    assert not over, f"plans over shuffle budget (got, allowed): {over}"
+def test_headline_exchange_budgets(audit_plans):
+    # @query(max_exchanges=N): a new Exchange (lost broadcast, extra
+    # repartition, lost bucketing) fails here before the bench sees it.
+    over = _contract_violations(audit_plans, "max_exchanges")
+    assert not over, f"plans over shuffle budget: {over}"
 
 
 def test_bucketed_join_stays_sortmerge_without_exchange(spark):
@@ -4838,19 +4691,11 @@ def test_shuffle_ledger_reads_real_metrics(spark):
     from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from tools.shuffle_ledger import collect_execution_metrics, max_execution_id
+    from tools.shuffle_ledger import collect_execution_metrics, execution_window
 
     from spark_ml_helper_spark.registry import REGISTRY
 
-    store = spark._jsparkSession.sharedState().statusStore()
-    # the store is listener-fed (async): drain before each window edge
-    # or a fast query lands outside its own id window
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-    after_id = max_execution_id(store)
-    REGISTRY["agg_group"].fn(spark, SF_SMOKE).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
+    store, after_id = execution_window(spark, REGISTRY["agg_group"].fn, SF_SMOKE)
     rec = collect_execution_metrics(store, after_id)
     assert rec["n_execs"] >= 1
     assert rec["shuffle_write_bytes"] > 0
@@ -4862,21 +4707,8 @@ def test_shuffle_ledger_reads_real_metrics(spark):
     assert rec["max_node_rows"] >= rec["shuffle_records"] > 0
 
 
-def test_window_volume_default_matches_whitelist():
-    # tools/window_volume_report carries a copy of the CI whitelist as
-    # its default query set (a tool importing the test module would be
-    # worse) — keep the copy honest.
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from tools.window_volume_report import DEFAULT_QUERIES
-
-    assert set(DEFAULT_QUERIES) == _GLOBAL_WINDOW_ALLOWED
-
-
 def test_window_volume_measures_bounded_claims(spark):
-    # The two strongest whitelist claims, verified at RUNTIME from the
+    # The two strongest global_window declarations, verified at RUNTIME from the
     # executed plan's per-node metrics (not from docstrings): ml_pca's
     # global windows each see exactly k=8 rows regardless of input
     # size, and win_pareto_frontier's window input is customer-group
@@ -4885,22 +4717,14 @@ def test_window_volume_measures_bounded_claims(spark):
     from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from tools.shuffle_ledger import max_execution_id
+    from tools.shuffle_ledger import execution_window
     from tools.window_volume_report import window_input_rows
 
     from spark_ml_helper_spark.registry import REGISTRY
     from spark_ml_helper_spark.sources.parquet import table
 
-    store = spark._jsparkSession.sharedState().statusStore()
-
     def measure(name):
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-        after = max_execution_id(store)
-        REGISTRY[name].fn(spark, SF_ORACLE).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-        return window_input_rows(store, after)
+        return window_input_rows(*execution_window(spark, REGISTRY[name].fn, SF_ORACLE))
 
     pca = measure("ml_pca")
     assert pca and all(r == 8 for _, _, r in pca), pca
@@ -4912,7 +4736,7 @@ def test_window_volume_measures_bounded_claims(spark):
 
 
 def test_bnlj_build_side_is_tiny_at_runtime(spark):
-    # The BNLJ whitelist's claim ("broadcast of a constant-size
+    # The bnlj declarations' claim ("broadcast of a constant-size
     # stat/spine frame") measured from the executed plan: the
     # BroadcastExchange actually feeding the nested-loop join carries
     # single-digit rows. Two representative sites; the full-registry
@@ -4922,19 +4746,12 @@ def test_bnlj_build_side_is_tiny_at_runtime(spark):
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from tools.bnlj_volume_report import bnlj_build_rows
-    from tools.shuffle_ledger import max_execution_id
+    from tools.shuffle_ledger import execution_window
 
     from spark_ml_helper_spark.registry import REGISTRY
 
-    store = spark._jsparkSession.sharedState().statusStore()
     for name in ("agg_ratio_to_report", "class_balance"):
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-        after = max_execution_id(store)
-        REGISTRY[name].fn(spark, SF_ORACLE).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-        joins = bnlj_build_rows(store, after)
+        joins = bnlj_build_rows(*execution_window(spark, REGISTRY[name].fn, SF_ORACLE))
         assert joins, f"{name} no longer plans a BNLJ — update this test"
         for _, r in joins:
             assert r is not None and r <= 8, (name, joins)

@@ -1,7 +1,7 @@
 """Measured build-side volume of every BroadcastNestedLoopJoin.
 
-The BNLJ CI whitelist (tests/test_pipeline.py `_BNLJ_ALLOWED`, ~94
-queries) documents each retained nested-loop join as "a broadcast of a
+Each query that keeps a nested-loop join declares it on its
+registration (``@query(..., bnlj="...")``) as "a broadcast of a
 constant-size stat/spine frame" — a 1-row global aggregate joined back
 to the stream, a bucket spine, a date grid. A nested-loop join over
 anything NOT constant-size is a scale defect, so the claim deserves a
@@ -12,9 +12,8 @@ BroadcastExchange reached walking DOWN from the BNLJ node is the build
 side; the probe side has no broadcast on its path).
 
 Usage: python -m tools.bnlj_volume_report [name ...]
-       (default: every registry query whose executed plan contains a
-       BNLJ — the sweep discovers them, so a query newly planning a
-       BNLJ shows up here without any list maintenance).
+       (default: every query declaring ``bnlj``; a query that plans an
+       undeclared BNLJ is what `python -m tools.plan_audit` reports).
 Honors SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS. One JSON line per query
 that contains at least one BNLJ; a summary line at the end gives the
 registry-wide maximum.
@@ -85,7 +84,6 @@ def bnlj_build_rows(store, after_id: int) -> list:
 
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -93,23 +91,15 @@ def main() -> None:
     from spark_ml_helper_spark.session import get_spark
 
     load_all_operators()
+    names = sys.argv[1:] or [n for n, s in REGISTRY.items() if s.bnlj]
     spark = get_spark(app_name="smhs-bnlj-volume", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    store = spark._jsparkSession.sharedState().statusStore()
 
-    from tools.shuffle_ledger import drain_listener_bus, max_execution_id
-
-    if not names:
-        names = list(REGISTRY)
+    from tools.shuffle_ledger import execution_window
 
     overall = 0
     for name in names:
-        drain_listener_bus(spark)
-        after_id = max_execution_id(store)
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        drain_listener_bus(spark)
+        store, after_id = execution_window(spark, REGISTRY[name].fn, sf_dir)
         joins = bnlj_build_rows(store, after_id)
         if not joins:
             continue

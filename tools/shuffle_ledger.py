@@ -110,6 +110,22 @@ def drain_listener_bus(spark) -> None:
         time.sleep(1.0)
 
 
+def execution_window(spark, fn, sf_dir: str) -> tuple:
+    """Run one query through the noop sink inside an execution-id window.
+
+    Drains the listener bus, takes max_execution_id, builds
+    ``fn(spark, sf_dir)`` and writes it to the noop sink, then drains
+    again. Returns ``(store, after_id)``: the executions the query
+    triggered — actions during plan construction included — are the
+    store's executions with id > after_id."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    drain_listener_bus(spark)
+    after_id = max_execution_id(store)
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    drain_listener_bus(spark)
+    return store, after_id
+
+
 def collect_execution_metrics(store, after_id: int) -> dict:
     """Aggregate SQLMetrics over every execution with id > after_id."""
     agg: dict[str, list[str]] = {}
@@ -164,15 +180,9 @@ def main() -> None:
     load_all_operators()
     spark = get_spark(app_name="smhs-shuffle-ledger", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    store = spark._jsparkSession.sharedState().statusStore()
 
     for name in names:
-        drain_listener_bus(spark)
-        after_id = max_execution_id(store)
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        drain_listener_bus(spark)
+        store, after_id = execution_window(spark, REGISTRY[name].fn, sf_dir)
         rec = {"query": name, "sf_dir": sf_dir}
         rec.update(collect_execution_metrics(store, after_id))
         print(json.dumps(rec), flush=True)

@@ -1,23 +1,22 @@
 """Measured input volume of every Window node in a query's executed plan.
 
-The global-window CI whitelist (tests/test_pipeline.py
-`_GLOBAL_WINDOW_ALLOWED`) documents WHY each retained global window is
-safe — "bounded by construction: k=8", "group cardinality", "global
-cumsum with a per-shard scale path". This tool turns those claims into
-MEASURED numbers: it executes each query and reads, for every Window
-node in the executed plan, the row count actually flowing into it
-(per-node SQLMetrics via the status store's plan graph — the Window
-node itself carries only a spill metric, so the walk descends the plan
-graph to the first descendant exposing "number of output rows" /
-"records read", taking the max across join branches).
+Each query that keeps a global window declares WHY on its registration
+(``@query(..., global_window="...")``) — "bounded by construction: k=8",
+"group cardinality", "global cumsum with a per-shard scale path". This
+tool turns those claims into MEASURED numbers: it executes each query
+and reads, for every Window node in the executed plan, the row count
+actually flowing into it (per-node SQLMetrics via the status store's
+plan graph — the Window node itself carries only a spill metric, so
+the walk descends the plan graph to the first descendant exposing
+"number of output rows" / "records read", taking the max across join
+branches).
 
 Usage: python -m tools.window_volume_report [name ...]
-       (default: the whitelist below). Honors SPARK_GRAFT_SF_DIR /
-       SPARK_GRAFT_CPUS. One JSON line per query.
+       (default: every query declaring ``global_window``). Honors
+       SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS. One JSON line per query.
 
-Measured at sf0.01 / sf0.1 (2026-08-16, recorded in the whitelist
-annotations and SCALE.md): the bounded-class claims hold exactly —
-`ml_pca` **8 / 8** rows into both windows (k=8,
+Measured at sf0.01 / sf0.1 (2026-08-16, recorded in SCALE.md): the
+bounded-class claims hold exactly — `ml_pca` **8 / 8** rows into both windows (k=8,
 input-size-INDEPENDENT), `ml_eval_auc` + `ml_eval_calibration`
 500 / 2,000 (distinct-rounded-score cardinality, sub-linear),
 `win_pareto_frontier` 1,500 / 14,999 (customer-group cardinality) —
@@ -37,16 +36,6 @@ import json
 import os
 import re
 import sys
-
-#: Mirror of tests/test_pipeline.py `_GLOBAL_WINDOW_ALLOWED` (the CI
-#: pin is authoritative; test_window_volume_default_matches_whitelist
-#: keeps this copy honest).
-DEFAULT_QUERIES = [
-    "sort_multi", "feature_quantile_bucket", "join_nearest_value",
-    "corpus_pack_sequences", "ml_eval_auc", "ml_eval_calibration",
-    "win_pareto_frontier", "corpus_token_budget",
-    "pipeline_pretrain_report", "ml_pca",
-]
 
 _WINDOW_NODES = ("Window", "WindowInPandas")
 _ROW_METRICS = ("number of output rows", "records read")
@@ -136,7 +125,6 @@ def window_input_rows(store, after_id: int) -> list:
 
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    names = sys.argv[1:] or DEFAULT_QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -144,19 +132,14 @@ def main() -> None:
     from spark_ml_helper_spark.session import get_spark
 
     load_all_operators()
+    names = sys.argv[1:] or [n for n, s in REGISTRY.items() if s.global_window]
     spark = get_spark(app_name="smhs-window-volume", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    store = spark._jsparkSession.sharedState().statusStore()
 
-    from tools.shuffle_ledger import drain_listener_bus, max_execution_id
+    from tools.shuffle_ledger import execution_window
 
     for name in names:
-        drain_listener_bus(spark)
-        after_id = max_execution_id(store)
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        drain_listener_bus(spark)
+        store, after_id = execution_window(spark, REGISTRY[name].fn, sf_dir)
         wins = window_input_rows(store, after_id)
         print(
             json.dumps(
