@@ -1377,11 +1377,19 @@ _DSIR_KEEP_Q = 0.75  # admit the top quartile by importance score
                          - ln((cr + 1.0) / (tot.nr + tot.v)), 9) AS lr
             FROM vocab CROSS JOIN tot
         ),
-        scores AS MATERIALIZED (
-            SELECT k.doc_id, round(avg(p.lr), 6) AS score,
+        sums AS (
+            SELECT k.doc_id, sum(CAST(round(p.lr * 1e9) AS BIGINT)) AS s,
                    CAST(count(*) AS BIGINT) AS n_tokens
             FROM toks k JOIN probs p ON p.t = k.t
             WHERE NOT k.is_t GROUP BY k.doc_id
+        ),
+        scores AS MATERIALIZED (
+            SELECT doc_id,
+                   CASE WHEN s < 0 THEN -1 ELSE 1 END
+                   * ((2 * abs(s) + 1000 * n_tokens) // (2000 * n_tokens))
+                   / 1e6 AS score,
+                   n_tokens
+            FROM sums
         ),
         th AS (SELECT quantile_cont(score, {_DSIR_KEEP_Q}) AS th FROM scores)
         SELECT s.doc_id, s.score, s.n_tokens, s.score >= t.th AS admitted
@@ -1404,7 +1412,12 @@ def corpus_importance_resample(spark, sf_dir):
     coarsens an engine-order-dependent double sum, the exact hazard
     class the Holt hypothesis sweeps measured at ~1e-3/value
     (sim_pq_adc's r7 fix; r8 ADVICE);
-    per-doc score = mean lr over its token OCCURRENCES (6 dp rounded);
+    per-doc score = mean lr over its token OCCURRENCES, rounded half
+    away from zero at 6 dp. The mean is taken EXACTLY, as an integer
+    sum of lr·1e9 divided in integer arithmetic: a mean of 9 dp values
+    can land exactly on a 6 dp tie (lr = -0.251314428, -0.117783036,
+    -0.117783036 → -0.1622935), where a double avg rounds either way
+    depending on the summation order;
     threshold = exact interpolated 75th percentile of the rounded
     scores (Spark percentile == DuckDB quantile_cont — the
     agg_percentile pairing), compared on the rounded grid.
@@ -1442,14 +1455,20 @@ def corpus_importance_resample(spark, sf_dir):
             9,
         ).alias("lr"),
     )
-    scores = (
+    sums = (
         toks.filter(~F.col("is_t"))
         .join(F.broadcast(probs), "t")
         .groupBy("doc_id")
         .agg(
-            F.round(F.avg("lr"), 6).alias("score"),
+            F.sum(F.round(F.col("lr") * 1e9).cast("bigint")).alias("s"),
             F.count("*").cast("bigint").alias("n_tokens"),
         )
+    )
+    q = F.expr("(2 * abs(s) + 1000 * n_tokens) div (2000 * n_tokens)")
+    scores = sums.select(
+        "doc_id",
+        (F.when(F.col("s") < 0, -q).otherwise(q) / 1e6).alias("score"),
+        "n_tokens",
     )
     th = scores.agg(F.percentile("score", _DSIR_KEEP_Q).alias("th"))
     return scores.crossJoin(F.broadcast(th)).select(
