@@ -28,9 +28,12 @@ load_all_operators()
 # verification window (~50 queries, taken from the head of ``queries()``)
 # re-records them.
 #
-# Head: graph_cc, whose edge list now comes from the shared
-# _cooccur_edges builder, and graph_pagerank, which now returns an empty
-# frame on empty events instead of raising. Then the queries whose code paths lost a probe-only
+# Head: graph_coreness, now one delta h-index fixpoint instead of a
+# per-level peel loop, and ml_gmm_em, whose EM rounds are now SQL text
+# instead of Column-API chains. Then graph_cc, whose edge list now comes
+# from the shared _cooccur_edges builder, and graph_pagerank, which now
+# returns an empty frame on empty events instead of raising. Then the
+# queries whose code paths lost a probe-only
 # option or gained a shared helper — Borůvka without its prune/edge-count
 # switches, the SSSP relax-merge shared with Δ-stepping, the set-similarity
 # kernels without n_blocks, and round_half_up's isfinite guard (ml_gmm_em).
@@ -40,6 +43,8 @@ load_all_operators()
 # per-round training checkpoints); the stalest-first tail then drains the
 # oldest record ring.
 _REVERIFY_FIRST: list[str] = [
+    "graph_coreness",
+    "ml_gmm_em",
     "graph_cc",
     "graph_pagerank",
     "graph_mst",
@@ -47,9 +52,7 @@ _REVERIFY_FIRST: list[str] = [
     "graph_sssp_delta",
     "dedup_containment",
     "dedup_ngram",
-    "ml_gmm_em",
     "graph_kcore",
-    "graph_coreness",
     "pipeline_pretrain_report",
     "dedup_incremental",
     "vec_kmeans_lloyd",

@@ -1885,7 +1885,7 @@ def _kcore_oracle(rounds: int = _KCORE_ROUNDS) -> str:
     """
 
 
-def kcore_fixpoint(edges, k, max_rounds=None, n_surv_out=None):
+def kcore_fixpoint(edges, k, max_rounds=None):
     """Delta-peel k-core decomposition over an undirected edge list
     (``edges``: src/dst with both directions present, materialized by
     the caller). Maintains each survivor's degree WITHIN the current
@@ -1900,10 +1900,6 @@ def kcore_fixpoint(edges, k, max_rounds=None, n_surv_out=None):
     (node, k) for the surviving core with k = degree within it; an
     empty removed set IS the fixpoint; raises after ``max_rounds``
     (default |V|+1 — every non-final round removes >= 1 node).
-    ``n_surv_out`` (r18): optional list; the final survivor count is
-    appended, tracked arithmetically from the per-round removed counts
-    the convergence test already pays for — callers that need emptiness
-    (coreness_decomposition's level loop) get it without an extra job.
 
     Checkpoint-stats audit (round 12): anti-join + left-join + select
     between checkpoints keeps the preserved estimate bounded — measured
@@ -1926,7 +1922,6 @@ def kcore_fixpoint(edges, k, max_rounds=None, n_surv_out=None):
     if max_rounds is None:
         max_rounds = n_nodes + 1
     edges = bounded_loop_frame(edges, counts["e"] or 0)
-    n_surv = n_nodes
     rounds = 0
     for _ in range(max_rounds):
         rounds += 1
@@ -1943,10 +1938,7 @@ def kcore_fixpoint(edges, k, max_rounds=None, n_surv_out=None):
         removed = deg.where(F.col("k") < kk).select("node")
         n_removed = removed.count()
         if n_removed == 0:
-            if n_surv_out is not None:
-                n_surv_out.append(n_surv)
             return deg, rounds
-        n_surv -= n_removed
         dec = (
             edges.join(removed.withColumnRenamed("node", "dst"), "dst", "left_semi")
             .groupBy(F.col("src").alias("node"))
@@ -2135,68 +2127,102 @@ def graph_coreness(spark, sf_dir):
     that v survives the k-core peel — the standard graph-curation
     ranking (Seidman 1983; corpus-graph centrality for sampling and
     hub detection, the per-node generalization of graph_kcore's k=3
-    membership gate). Runs ``kcore_fixpoint`` once per level with
-    PROGRESSIVE RESTRICTION: the k-core of G equals the k-core of its
-    own (k−1)-core, so level k peels only the previous level's
-    survivor subgraph — the edge frame shrinks monotonically and the
-    total work is bounded by the k=2 peel plus strictly smaller
-    repeats, each level itself delta-peeled (every edge charged at
-    most once per level). The cap is declared semantics on BOTH
-    engines (the oracle unions levels 2..6; real corpora put the
-    interesting mass far below the cap and raising it is one
-    constant). Per-level guarded oracle chains mismatch loudly on any
-    unconverged unroll; the hypothesis property test replays the
-    levels at rounds = |V| against a pure-Python exact coreness peel.
-    Exact integers throughout."""
+    membership gate). Computed by ``coreness_decomposition``, one
+    delta h-index fixpoint over all levels at once (Montresor, De
+    Pellegrini & Miorandi, Distributed k-Core Decomposition, IEEE TPDS
+    2013). The cap is declared semantics on BOTH engines (the oracle
+    unions levels 2..6; real corpora put the interesting mass far below
+    the cap and raising it is one constant). The oracle runs one
+    guarded peel chain per level and mismatches loudly on any
+    unconverged unroll; a hypothesis property test checks the Spark
+    fixpoint against a pure-Python capped peel. Exact integers
+    throughout."""
     edges = _cooccur_edges(spark, sf_dir, _KCORE_MIN_COOCCUR)
     return coreness_decomposition(edges)
 
 
 def coreness_decomposition(edges, kmax=None):
-    """The graph_coreness level loop, factored (round 14) so the pinned
-    synthetic-fixture bench row (operators/graph_bench.py) times the
-    SAME progressive-restriction decomposition the registry query runs —
-    plan-identical for the registry caller (the loop body is byte-moved,
-    kmax defaults to the declared cap), re-oracled at sf0.01 in the
-    same round."""
+    """``(node, coreness)`` with coreness capped at ``kmax`` (default the
+    declared cap) for every node of ``edges`` (src/dst, both directions
+    present), by the delta h-index fixpoint of Montresor et al.
+
+    State: one row per node, ``(node, est, c2..c_kmax)``, where ``est``
+    is the node's coreness estimate and ``c_k`` counts its neighbours
+    with ``est >= k`` (``c_1`` is the degree and never changes, so it is
+    not stored). It starts at ``est = min(degree, kmax)``. Each round
+    every node sets ``est = min(est, h)`` with ``h = max{k : c_k >= k}``;
+    a node whose estimate fell from ``old`` to ``new`` decrements its
+    neighbours' ``c_k`` for ``new < k <= old`` — one equi-join of the
+    edge list against the changed set plus one aggregate, joined back
+    into the state. So an edge is touched only when an endpoint's
+    estimate drops (as in ``kcore_fixpoint``'s delta peel). The
+    estimates descend from above to the greatest fixpoint below the
+    start, which is exactly ``min(coreness, kmax)``: every node of a
+    k-core (k <= kmax) keeps k neighbours at ``est >= k``, so it never
+    drops under k, and at the fixpoint the nodes at ``est >= k`` each
+    have k such neighbours, so they lie in the k-core.
+
+    One action per round: the state is checkpointed lazily and the
+    round's aggregate (changed nodes, all nodes) materializes it. An
+    empty changed set is the fixpoint; every other round lowers Σ est by
+    at least one, so the loop raises once ``kmax·|V| + 1`` rounds pass
+    without convergence. The per-round expressions are SQL text
+    (OPERATING.md, loop bodies)."""
     if kmax is None:
         kmax = _CORENESS_KMAX
-    # one metadata count bounds the edge frame's task count for EVERY
-    # level's peel + restriction pass (r18, bounded_loop_frame): the
-    # decomposition re-scans the edge frame ~2x per level, so the count
-    # amortizes over the whole run; on the clique-bundle bench fixture
-    # this removed 128-task scheduling walls from every deg/restrict pass
-    edges = bounded_loop_frame(edges, edges.count())
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    out = nodes.select("node", F.lit(1).cast("bigint").alias("coreness"))
-    cur = edges
-    for k in range(2, kmax + 1):
-        n_surv: list = []
-        deg, _rounds = kcore_fixpoint(cur, k, n_surv_out=n_surv)
-        if n_surv[0] == 0:
-            break
-        # deg is already a materialized checkpoint — a projection over it
-        # is cheap per use; the old eager surv checkpoint + isEmpty pair
-        # was two extra jobs per level (r18)
-        surv = deg.select("node")
-        out = (
-            out.join(surv.withColumn("hit", F.lit(True)), "node", "left")
-            .select(
-                "node",
-                F.when(F.col("hit"), F.lit(k).cast("bigint"))
-                .otherwise(F.col("coreness"))
-                .alias("coreness"),
+    ks = range(2, kmax + 1)
+    # h = max{k : c_k >= k}: c_k falls as k grows, so the first hit from
+    # the top is the maximum; c_1 = degree >= 1 makes 1 the floor
+    h = "CASE " + "".join(f"WHEN c{k} >= {k} THEN {k} " for k in reversed(ks)) + "ELSE 1 END"
+    # one metadata count bounds the edge frame's task count for every
+    # round's join (bounded_loop_frame). Below the same threshold the
+    # per-round frames (at most one row per node) are broadcast: left to
+    # the planner, the edge frame's small estimate would make IT the
+    # build side of every round's join. Large graphs keep the planner's
+    # choice.
+    n_edges = edges.count()
+    edges = bounded_loop_frame(edges, n_edges)
+    bcast = F.broadcast if n_edges < SMALL_LOOP_ROWS else (lambda df: df)
+    est0 = edges.groupBy("src").agg(F.expr(f"least(count(*), {kmax}) AS e"))
+    state = (
+        edges.join(est0.withColumnRenamed("src", "dst"), "dst")
+        .groupBy(F.col("src").alias("node"))
+        .agg(
+            F.expr(f"CAST(least(count(*), {kmax}) AS BIGINT) AS est"),
+            *[F.expr(f"count_if(e >= {k}) AS c{k}") for k in ks],
+        )
+        .localCheckpoint(eager=False)
+    )
+    rounds = 0
+    while True:
+        rounds += 1
+        counts = state.selectExpr(
+            f"count_if({h} < est) AS n_changed", "count(*) AS n_nodes"
+        ).first()
+        if counts["n_changed"] == 0:
+            return state.selectExpr("node", "est AS coreness")
+        if rounds >= kmax * counts["n_nodes"] + 1:
+            raise RuntimeError(
+                f"coreness_decomposition: h-index failed to converge in {rounds} rounds"
             )
-            # lazy: materialized by the next level's first job (or the
-            # caller's action) — an eager job per level bought nothing
-            .localCheckpoint(eager=False)
+        changed = state.where(f"{h} < est").selectExpr(
+            "node AS src", "est AS old", f"{h} AS new"
         )
-        cur = (
-            cur.join(surv.withColumnRenamed("node", "src"), "src", "left_semi")
-            .join(surv.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=False)
+        dec = (
+            edges.join(bcast(changed), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(*[F.expr(f"count_if(new < {k} AND {k} <= old) AS d{k}") for k in ks])
         )
-    return out
+        # the state joins a frame derived from itself, so a plain
+        # checkpoint's size estimate would compound every round
+        state = fresh_stats_checkpoint(
+            state.join(bcast(dec), "node", "left").selectExpr(
+                "node",
+                f"least(est, {h}) AS est",
+                *[f"c{k} - coalesce(d{k}, 0) AS c{k}" for k in ks],
+            ),
+            eager=False,
+        )
 
 
 _MST_ROUNDS = 10  # components at least halve per Borůvka round, so 10

@@ -84,16 +84,15 @@ MST_PATHS = 4_096
 MST_PATH_LEN = 8
 
 #: Clique bundle for coreness: CORE_COPIES disjoint cliques of each
-#: size in CORE_SIZES (a size-s clique has coreness s-1). At level k
-#: every clique below k peels in ONE round (all members drop under k
-#: simultaneously), so the decomposition runs ~2 rounds per level over
-#: a real edge frame — few rounds, real volume: the right shape for a
-#: band row. (The staircase probe shape peels one node per round — an
+#: size in CORE_SIZES (a size-s clique has coreness s-1). Every clique
+#: member starts the h-index fixpoint at its degree s-1, which is
+#: already its coreness, so the fixpoint converges in its first round
+#: over a real edge frame — one round, real volume: the right shape for
+#: a band row. (The staircase probe shape lowers one node per round — an
 #: adversarial ROUND-GROWTH probe, not a band fixture; it cost 12-19 s
-#: here, and the 3..7 clique sweep's 5 levels cost 11-12 s at
-#: ~2 s/level, measured round 14. Sizes (3, 4) run 3 levels — k=2
-#: stability-detect, k=3 peels the 3-cliques, k=4 peels the bundle
-#: empty and breaks.)
+#: here under the old per-level loop, and the 3..7 clique sweep cost
+#: 11-12 s, measured round 14; SCALE.md has the staircase numbers of
+#: the h-index fixpoint.)
 CORE_COPIES = 2_000
 CORE_SIZES = (3, 4)
 

@@ -147,14 +147,18 @@ def join_broadcast(spark, sf_dir):
         GROUP BY s_suppkey, s_name
     """,
     family="joins",
-    bnlj="the theta join is the operator; supplier side broadcast (100 rows at sf0.01)",
+    bnlj="the theta join is the operator; the supplier build side grows with the "
+    "data (100 rows at sf0.01, 1,000 at sf0.1) — join_range_banded is the scale form",
 )
 def join_range(spark, sf_dir):
     """Non-equi (theta/range) join: customers whose balance is within ±10 of
-    a supplier's. Physical plan is broadcast-nested-loop (supplier side is
-    tiny). Scale note: a pure theta join is O(n·m) — at 100 TB you band the
-    range (join on floor(bal/width) buckets ± 1, then filter) to make it an
-    equi-join; this operator documents the banding rewrite."""
+    a supplier's. Physical plan is broadcast-nested-loop with the supplier
+    side as the build side. That side is small but NOT constant: supplier
+    scales with the data (100 rows at sf0.01, 1,000 at sf0.1), so the join
+    is O(n·m) and its cost grows with the square of the scale factor.
+    ``join_range_banded`` implements the scale form: band the range (join
+    on floor(bal/width) buckets ± 1, then filter) to make it an
+    equi-join, with the same oracle and output."""
     s = table(spark, sf_dir, "supplier")
     c = table(spark, sf_dir, "customer")
     cond = (c.c_acctbal >= s.s_acctbal - 10.0) & (c.c_acctbal <= s.s_acctbal + 10.0)
@@ -685,8 +689,8 @@ def join_range_banded(spark, sf_dir):
     buckets, EQUI-join on the bucket key, and apply the exact range
     predicate as a residual filter. This turns the O(n·m)
     nested-loop theta join into a hash join whose shuffle key is the
-    bucket — the rewrite join_range's docstring promises for 100 TB,
-    here implemented and hash-verified EQUAL to the nested-loop form.
+    bucket — the scale form of join_range, hash-verified EQUAL to the
+    nested-loop form.
     Each qualifying pair lands in exactly one bucket of the exploded
     side, so no dedup is needed; the 3× explode is on the small side
     only. Bucket width is the selectivity dial: width ≈ range keeps

@@ -230,7 +230,10 @@ def ml_scaler_pipeline(spark, sf_dir):
     )
 
 
-@query("ml_als", oracle=None, family="ml")
+@query(
+    "ml_als", oracle=None, family="ml",
+    cartesian="MLlib's recommendForUserSubset crosses user and item factor blocks",
+)
 def ml_als(spark, sf_dir):
     """ALS collaborative filtering (MLlib's distributed implicit-feedback
     matrix factorization) on interactions synthesized from events:
@@ -1861,22 +1864,24 @@ def ml_gmm_em(spark, sf_dir):
     own EM; the driver state is O(k*d) scalars per round."""
     e = table(spark, sf_dir, "embeddings")
     K, D = _GMM_K, _GMM_D
-    pts = e.select(
-        "vec_id",
-        *[F.element_at("embedding", d).cast("double").alias(f"x{d}") for d in range(1, D + 1)],
+    dims = range(1, D + 1)
+    # every per-round expression is SQL text, one selectExpr per
+    # projection: a Column-API call costs ~4x the py4j round-trips of
+    # F.expr, and the 27 aggregates x 3 rounds made this loop
+    # py4j-bound (OPERATING.md, loop bodies)
+    pts = e.selectExpr(
+        "vec_id", *[f"CAST(element_at(embedding, {d}) AS DOUBLE) AS x{d}" for d in dims]
     ).localCheckpoint()
-    var_row = pts.agg(
-        *[F.round(F.var_pop(f"x{d}"), 8).alias(f"v{d}") for d in range(1, D + 1)]
-    ).collect()[0]
+    var_row = pts.selectExpr(*[f"round(var_pop(x{d}), 8) AS v{d}" for d in dims]).collect()[0]
     mu_rows = (
-        pts.groupBy((F.col("vec_id") % K).alias("g"))
-        .agg(*[F.round(F.avg(f"x{d}"), 8).alias(f"m{d}") for d in range(1, D + 1)])
+        pts.groupBy(F.expr(f"vec_id % {K} AS g"))
+        .agg(*[F.expr(f"round(avg(x{d}), 8) AS m{d}") for d in dims])
         .collect()
     )
-    mu_by_g = {int(r["g"]): [r[f"m{d}"] for d in range(1, D + 1)] for r in mu_rows}
+    mu_by_g = {int(r["g"]): [r[f"m{d}"] for d in dims] for r in mu_rows}
     wk = [0.33333333] * K
     mu = [mu_by_g[k][:] for k in range(K)]
-    va = [[var_row[f"v{d}"] for d in range(1, D + 1)] for k in range(K)]
+    va = [[var_row[f"v{d}"] for d in dims] for k in range(K)]
 
     def s_expr(k):
         return _gmm_s_skeleton(
@@ -1886,32 +1891,29 @@ def ml_gmm_em(spark, sf_dir):
             lambda d, k=k: repr(va[k][d - 1]),
         )
 
+    def scored_pts():
+        """pts plus the round's log-scores s_k and their max sm."""
+        return pts.selectExpr("*", *[f"{s_expr(k)} AS s{k}" for k in range(K)]).selectExpr(
+            "*", f"greatest({', '.join(f's{k}' for k in range(K))}) AS sm"
+        )
+
     rexprs = _gmm_resp_exprs()
+    aggs = []
+    for k in range(K):
+        aggs.append(f"round(avg(r{k}), 8) AS a_r{k}")
+        for d in dims:
+            aggs.append(f"round(avg(r{k} * x{d}), 8) AS a_rx{k}_{d}")
+            aggs.append(f"round(avg(r{k} * x{d} * x{d}), 8) AS a_rxx{k}_{d}")
     for _ in range(_GMM_ROUNDS):
-        scored = pts
-        for k in range(K):
-            scored = scored.withColumn(f"s{k}", F.expr(s_expr(k)))
-        scored = scored.withColumn(
-            "sm", F.greatest(*[F.col(f"s{k}") for k in range(K)])
+        g = (
+            scored_pts()
+            .selectExpr("*", *[f"{rexprs[k]} AS r{k}" for k in range(K)])
+            .selectExpr(*aggs)
+            .collect()[0]
         )
         for k in range(K):
-            scored = scored.withColumn(f"r{k}", F.expr(rexprs[k]))
-        aggs = []
-        for k in range(K):
-            aggs.append(F.round(F.avg(f"r{k}"), 8).alias(f"a_r{k}"))
-            for d in range(1, D + 1):
-                aggs.append(
-                    F.round(F.avg(F.col(f"r{k}") * F.col(f"x{d}")), 8).alias(f"a_rx{k}_{d}")
-                )
-                aggs.append(
-                    F.round(
-                        F.avg(F.col(f"r{k}") * F.col(f"x{d}") * F.col(f"x{d}")), 8
-                    ).alias(f"a_rxx{k}_{d}")
-                )
-        g = scored.agg(*aggs).collect()[0]
-        for k in range(K):
             wk[k] = g[f"a_r{k}"]
-            for d in range(1, D + 1):
+            for d in dims:
                 a_r, a_rx, a_rxx = g[f"a_r{k}"], g[f"a_rx{k}_{d}"], g[f"a_rxx{k}_{d}"]
                 mu[k][d - 1] = round_half_up(a_rx / a_r, 8)
                 va[k][d - 1] = max(
@@ -1919,18 +1921,14 @@ def ml_gmm_em(spark, sf_dir):
                     _GMM_VFLOOR,
                 )
 
-    final = pts
-    for k in range(K):
-        final = final.withColumn(f"s{k}", F.expr(s_expr(k)))
-    final = final.withColumn("sm", F.greatest(*[F.col(f"s{k}") for k in range(K)]))
     lldenom = " + ".join(f"exp(s{k} - sm)" for k in range(K))
-    met = final.select(F.expr(f"ln({lldenom}) + sm").alias("ll")).agg(
-        F.round(F.avg("ll"), 6).alias("loglik")
+    met = scored_pts().selectExpr(f"ln({lldenom}) + sm AS ll").selectExpr(
+        "round(avg(ll), 6) AS loglik"
     )
     params = [
         (k, d, wk[k], mu[k][d - 1], va[k][d - 1])
         for k in range(K)
-        for d in range(1, D + 1)
+        for d in dims
     ]
     out = spark.createDataFrame(
         params, "component bigint, dim bigint, weight double, mu double, sigma2 double"

@@ -5,7 +5,8 @@ aggs have partial phases, no accidental nested-loop joins) is a property
 of the PLAN, not of any test dataset — these helpers extract that
 evidence from a DataFrame so tests and tools can assert it. Each query
 declares the plan shapes it is allowed on its ``@query`` registration
-(``bnlj``, ``global_window``, ``max_exchanges``); `contract_violations`
+(``bnlj``, ``cartesian``, ``global_window``, ``max_exchanges``);
+`contract_violations`
 checks one plan against that declaration. Used by the CI plan audit
 (tests/test_pipeline.py, over PLAN_AUDIT_FAMILIES) and by
 `python -m tools.plan_audit` (every registered query).
@@ -312,19 +313,20 @@ def global_window_risks(df_or_plan) -> list:
 def contract_violations(spec, plan: str) -> list[str]:
     """Where ``plan`` breaks the contract ``spec`` (a registry QuerySpec)
     declares, one ``"<property>: <finding>"`` string each; [] is a clean
-    plan. A BroadcastNestedLoopJoin or a global window over a non-reduced
-    input needs a declared reason, and a declared one must still be
-    planned — a stale declaration would hide the next, non-tiny one. A
-    CartesianProduct in PLAN_AUDIT_FAMILIES is always a defect (outside
-    them, MLlib's blocked ALS recommender plans one by design)."""
+    plan. A BroadcastNestedLoopJoin, a CartesianProduct or a global window
+    over a non-reduced input needs a declared reason, in any family, and
+    a declared one must still be planned — a stale declaration would
+    hide the next, unbounded one."""
     s = plan_summary(plan)
     out = []
     if s["nested_loop_joins"] and not spec.bnlj:
         out.append("bnlj: undeclared BroadcastNestedLoopJoin")
     if spec.bnlj and not s["nested_loop_joins"]:
         out.append("bnlj: declared, but no BroadcastNestedLoopJoin planned")
-    if s["cartesian_products"] and spec.family in PLAN_AUDIT_FAMILIES:
-        out.append("cartesian: CartesianProduct")
+    if s["cartesian_products"] and not spec.cartesian:
+        out.append("cartesian: undeclared CartesianProduct")
+    if spec.cartesian and not s["cartesian_products"]:
+        out.append("cartesian: declared, but no CartesianProduct planned")
     risky = bool(global_window_risks(plan))
     if risky and not spec.global_window:
         out.append("global_window: undeclared global window over non-reduced input")

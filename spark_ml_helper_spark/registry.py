@@ -32,6 +32,7 @@ class QuerySpec:
     # Plan contract (checked by the plan audit, plans/audit.py): a
     # one-line reason per allowed plan shape, and an exchange budget.
     bnlj: str = ""
+    cartesian: str = ""
     global_window: str = ""
     max_exchanges: Optional[int] = None
 
@@ -45,6 +46,7 @@ def query(
     family: str = "",
     *,
     bnlj: str = "",
+    cartesian: str = "",
     global_window: str = "",
     max_exchanges: Optional[int] = None,
 ) -> Callable[[QueryFn], QueryFn]:
@@ -52,8 +54,9 @@ def query(
     expressible or approximate) operator.
 
     The plan contract sits next to the code it describes: ``bnlj`` says
-    why the plan may (and must) hold a BroadcastNestedLoopJoin (a
-    constant-size build side), ``global_window`` why an unpartitioned
+    why the plan may (and must) hold a BroadcastNestedLoopJoin (and how
+    its build side scales), ``cartesian`` why it may (and must) hold a
+    CartesianProduct, ``global_window`` why an unpartitioned
     window over a non-reduced input is the semantic, each in one line
     (the docstring prices the scale path); ``max_exchanges`` is the
     plan's shuffle budget."""
@@ -66,7 +69,8 @@ def query(
             raise ValueError(f"duplicate query registration: {name!r}")
         REGISTRY[name] = QuerySpec(
             name=name, fn=fn, oracle=oracle, family=family, doc=fn.__doc__ or "",
-            bnlj=bnlj, global_window=global_window, max_exchanges=max_exchanges,
+            bnlj=bnlj, cartesian=cartesian, global_window=global_window,
+            max_exchanges=max_exchanges,
         )
         return fn
 

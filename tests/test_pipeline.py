@@ -1774,6 +1774,7 @@ def audit_plans(spark):
         for name, spec in REGISTRY.items()
         if spec.family in PLAN_AUDIT_FAMILIES
         or spec.bnlj
+        or spec.cartesian
         or spec.global_window
         or spec.max_exchanges is not None
     }
@@ -1794,14 +1795,15 @@ def _contract_violations(plans, *props):
 
 
 def test_plan_audit_no_new_nested_loops(audit_plans):
-    # A nested-loop join is legitimate only over a constant-size
-    # stat/spine frame, declared with @query(bnlj="...");
+    # A nested-loop join is legitimate only over a small stat/spine
+    # frame, declared with @query(bnlj="..."), and a CartesianProduct
+    # only where declared with @query(cartesian="...");
     # tools/bnlj_volume_report measures the build sides and
     # test_bnlj_build_side_is_tiny_at_runtime pins two at runtime.
     bad = _contract_violations(audit_plans, "bnlj", "cartesian")
     assert not bad, (
-        f"nested-loop contract broken: {bad} — drop the non-equi join, or "
-        f"declare bnlj= on a constant-size build side (remove a stale one)"
+        f"nested-loop/cartesian contract broken: {bad} — drop the non-equi "
+        f"join, or declare bnlj=/cartesian= with its reason (remove a stale one)"
     )
 
 
@@ -2166,6 +2168,43 @@ def test_synth_graph_bench_fixtures(spark, monkeypatch):
         for r in out.groupBy("coreness").agg(F.count("*").alias("n")).collect()
     }
     assert got == {s - 1: 10 * s for s in gb.CORE_SIZES}
+
+
+def test_loop_rows_structural_pin(spark, monkeypatch):
+    # perfbench's loops rows are driver-bound, so their cost shows in
+    # counts before it shows in wall time. Coreness is one h-index
+    # fixpoint: on the clique bundle it converges in its first round
+    # (edge count, that round's aggregate, the sink — the old level loop
+    # ran 31 jobs). ml_gmm_em renders its rounds as SQL text: a
+    # Column-API loop body made 6,092 py4j calls.
+    import spark_ml_helper_spark.operators.graph_bench as gb
+    from spark_ml_helper_spark.operators.graph import coreness_decomposition
+
+    monkeypatch.setattr(gb, "CORE_COPIES", 10)
+    edges = gb.coreness_bench_edges(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("coreness_pin", "coreness structural pin")
+    try:
+        coreness_decomposition(edges).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("coreness_pin")
+    assert len(jobs) <= 6, jobs
+
+    client = sc._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # object releases follow the GC
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        QUERIES["ml_gmm_em"](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+    finally:
+        del client.send_command
+    assert len(calls) < 1_000, len(calls)
 
 
 def test_daily_kpis_internally_consistent(spark):

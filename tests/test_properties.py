@@ -5,7 +5,9 @@ and WAV codecs must round-trip EVERY geometry (odd widths exercise the
 4-byte row padding), and SimHash's 4x15-bit banding must find every
 signature pair within the hamming<=3 design threshold (the pigeonhole
 guarantee dedup_simhash's banded join relies on for exactness).
-No SparkSession needed — these run in milliseconds.
+Most need no SparkSession and run in milliseconds; the few that check a
+Spark operator against a pure-Python replay take the shared session and
+run few examples.
 """
 
 from __future__ import annotations
@@ -806,6 +808,73 @@ def test_dedup_substring_remove_oracle_matches_python(n_docs, vocab_n, seed):
         assert n_removed <= covered[doc_id], (doc_id, n_removed, covered[doc_id])
 
 
+def _capped_coreness(adj, kmax):
+    """Exact coreness by whole-set peeling per level, capped at kmax;
+    every node of ``adj`` (node -> neighbour set) has coreness >= 1."""
+    want = {n: 1 for n in adj}
+    for k in range(2, kmax + 1):
+        alive = set(adj)
+        while True:
+            dead = {n for n in alive if len(adj[n] & alive) < k}
+            if not dead:
+                break
+            alive -= dead
+        for n in alive:
+            want[n] = k
+    return want
+
+
+def _coreness_shape(shape, n, seed):
+    """Undirected edge pairs of one test graph shape with ~n nodes."""
+    rng = np.random.default_rng(seed)
+    if shape == "random":
+        pairs = [tuple(p) for p in rng.integers(0, n, size=(3 * n, 2)) if p[0] != p[1]]
+    elif shape == "path":
+        pairs = [(i, i + 1) for i in range(n)]
+    elif shape == "staircase":
+        # a 5-clique core, then a tail where node t links to its 3
+        # predecessors: at k=4 the tail peels one node per round
+        pairs = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+        pairs += [(t, t - b) for t in range(5, 5 + n) for b in (1, 2, 3)]
+    else:  # disjoint cliques of 2..8 nodes (past the cap), each with a pendant
+        pairs, base = [], 0
+        for size in rng.integers(2, 9, size=max(1, n // 4)):
+            pairs += [(base + a, base + b) for a in range(size) for b in range(a + 1, size)]
+            pairs.append((base, base + size))
+            base += size + 1
+    return pairs
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    shape=st.sampled_from(["random", "path", "staircase", "cliques"]),
+    n=st.integers(2, 14),
+    kmax=st.sampled_from([3, 6]),
+    seed=st.integers(0, 2**31 - 1),
+)
+@example(shape="random", n=14, kmax=6, seed=7)
+@example(shape="path", n=6, kmax=6, seed=0)
+@example(shape="staircase", n=8, kmax=6, seed=0)
+@example(shape="cliques", n=14, kmax=6, seed=3)
+def test_spark_coreness_matches_python_peel(spark, shape, n, kmax, seed):
+    # the delta h-index fixpoint (Spark) against whole-set peeling per
+    # level (Python), on the shared session: few examples, tiny graphs
+    from collections import defaultdict
+
+    from spark_ml_helper_spark.operators.graph import coreness_decomposition
+
+    adj = defaultdict(set)
+    for a, b in _coreness_shape(shape, n, seed):
+        adj[int(a)].add(int(b))
+        adj[int(b)].add(int(a))
+    rows = [(a, b) for a in adj for b in adj[a]]
+    # checkpointed, like every caller's edge frame: a bare local list
+    # is a Python RDD that every round would re-scan through a worker
+    edges = spark.createDataFrame(rows, "src bigint, dst bigint").localCheckpoint()
+    got = {r["node"]: r["coreness"] for r in coreness_decomposition(edges, kmax).collect()}
+    assert got == _capped_coreness(adj, kmax), (shape, sorted(got.items()))
+
+
 @settings(max_examples=30, deadline=None)
 @given(
     n_cust=st.integers(3, 12),
@@ -861,18 +930,7 @@ def test_coreness_oracle_matches_python_peel(n_cust, n_supp, n_orders, seed):
         if cnt >= _KCORE_MIN_COOCCUR:
             adj[c].add(s + _CC_SUPP_OFFSET)
             adj[s + _CC_SUPP_OFFSET].add(c)
-    want = {}
-    for k in range(2, _CORENESS_KMAX + 1):
-        alive = set(adj)
-        while True:
-            dead = {n for n in alive if len(adj[n] & alive) < k}
-            if not dead:
-                break
-            alive -= dead
-        for n in alive:
-            want[n] = k
-    for n in adj:
-        want.setdefault(n, 1)
+    want = _capped_coreness(adj, _CORENESS_KMAX)
     assert got == want, (sorted(got.items()), sorted(want.items()))
 
 

@@ -4,9 +4,9 @@ contract it declares on its ``@query`` registration.
 Prints one JSON line per query: the plan_summary dict (exchanges, join
 strategies, nested-loop/cartesian counts, codegen spans, pushdown
 coverage), the global-window risk count, and the contract violations
-(plans.audit.contract_violations: an undeclared BroadcastNestedLoopJoin
-or global window, a declared one no longer planned, an exchange count
-over ``max_exchanges``, a CartesianProduct in PLAN_AUDIT_FAMILIES). A
+(plans.audit.contract_violations: an undeclared BroadcastNestedLoopJoin,
+CartesianProduct or global window, a declared one no longer planned, an
+exchange count over ``max_exchanges``). A
 last line gives the totals and exit status is 1 if any query violates
 its contract or fails to build.
 
