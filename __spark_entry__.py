@@ -28,9 +28,11 @@ load_all_operators()
 # verification window (~50 queries, taken from the head of ``queries()``)
 # re-records them.
 #
-# Head: graph_coreness, now one delta h-index fixpoint instead of a
-# per-level peel loop, and ml_gmm_em, whose EM rounds are now SQL text
-# instead of Column-API chains. Then graph_cc, whose edge list now comes
+# Head: the ten queries whose driver-held rows became SQL-text literals
+# instead of createDataFrame frames (ml_gmm_em also takes its init
+# statistics in one aggregate and returns the oracle's rows on empty
+# embeddings). Then graph_coreness, now one delta h-index fixpoint instead
+# of a per-level peel loop, and ml_gmm_em's SQL-text EM rounds. Then graph_cc, whose edge list now comes
 # from the shared _cooccur_edges builder, and graph_pagerank, which now
 # returns an empty frame on empty events instead of raising. Then the
 # queries whose code paths lost a probe-only
@@ -43,8 +45,17 @@ load_all_operators()
 # per-round training checkpoints); the stalest-first tail then drains the
 # oldest record ring.
 _REVERIFY_FIRST: list[str] = [
-    "graph_coreness",
     "ml_gmm_em",
+    "ml_logreg_gd",
+    "ml_pca",
+    "ml_cross_validate",
+    "vec_kmeans_elbow",
+    "scan_observed",
+    "text_sentiment",
+    "tokenizer_bpe_train",
+    "text_heaps_law",
+    "pipeline_retrieval",
+    "graph_coreness",
     "graph_cc",
     "graph_pagerank",
     "graph_mst",

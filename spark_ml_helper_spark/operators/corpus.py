@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from spark_ml_helper_spark.functions.literals import inline_rows
 from spark_ml_helper_spark.registry import query
 from spark_ml_helper_spark.sources.parquet import table
 from spark_ml_helper_spark.operators.text import _tokens
@@ -675,10 +676,8 @@ def text_sentiment(spark, sf_dir):
     per-doc agg: no shuffle carries more than (doc_id, partial-sum). A
     model-based scorer swaps the join for an Arrow-batched Pandas UDF;
     plan shape is otherwise identical."""
-    lex = spark.createDataFrame(
-        [("fast", 1), ("big", 1), ("merge", 1), ("slow", -1), ("small", -1), ("dup", -1)],
-        "w string, polarity int",
-    )
+    lex_rows = [("fast", 1), ("big", 1), ("merge", 1), ("slow", -1), ("small", -1), ("dup", -1)]
+    lex = spark.sql(f"SELECT {inline_rows(lex_rows, 'w string, polarity int')}")
     d = table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(_tokens()).alias("w"))
     return (
@@ -754,7 +753,7 @@ def tokenizer_bpe_train(spark, sf_dir):
     scale rounds are the cost knob: production BPE batches the top-k
     non-overlapping pairs per round; the plan shape is unchanged."""
     merges, _final = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(merges, "merge_rank int, pair string, n bigint")
+    return spark.sql(f"SELECT {inline_rows(merges, 'merge_rank int, pair string, n bigint')}")
 
 
 def _bpe_train(spark, sf_dir):
@@ -1347,7 +1346,9 @@ def text_heaps_law(spark, sf_dir):
     vocab snapshots, not re-scans."""
     d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"))
-    caps = spark.createDataFrame([(c,) for c in [50, 100, 200, 300, 400, 500]], "cap bigint")
+    caps = spark.sql(
+        f"SELECT {inline_rows([(c,) for c in [50, 100, 200, 300, 400, 500]], 'cap bigint')}"
+    )
     pts = (
         toks.join(F.broadcast(caps), F.col("doc_id") < F.col("cap"))
         .groupBy("cap", "w")

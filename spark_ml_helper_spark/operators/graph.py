@@ -1906,10 +1906,14 @@ def kcore_fixpoint(edges, k, max_rounds=None):
     digits plateau at 20 across 42 checkpoints on the 40-node staircase
     peel. No fresh_stats_checkpoint needed."""
     kk = k
-    # lazy checkpoint + one agg: a single job materializes deg AND yields
+    # lazy checkpoint + one agg: the agg materializes deg AND yields
     # both the node count (round bound) and the edge count (Σ degree =
     # directed edge rows — the loop-frame bound needs EDGE volume, not
-    # node count: a dense small-|V| graph must keep its partitioning)
+    # node count: a dense small-|V| graph must keep its partitioning).
+    # "Lazy" is not free under AQE: the checkpoint call itself plans deg
+    # and runs its groupBy's shuffle-map stage as a job of its own
+    # (status tracker on graph_kcore: 1 job inside the call), so more
+    # than one job materializes deg; only the final stage waits for the agg
     # (r18 job consolidation — the min_label_fixpoint lesson: job
     # submission overhead dominates these dictionary-sized rounds)
     deg = (
@@ -1925,9 +1929,11 @@ def kcore_fixpoint(edges, k, max_rounds=None):
     rounds = 0
     for _ in range(max_rounds):
         rounds += 1
-        # ONE job per round: counting the removed set materializes the
+        # ONE action per round: counting the removed set materializes the
         # PREVIOUS round's lazily-checkpointed deg update it derives
-        # from AND answers the convergence test. removed itself is a
+        # from AND answers the convergence test (the update's shuffle-map
+        # stages already ran inside its localCheckpoint call, as jobs of
+        # their own: 7 on graph_kcore at sf0.01). removed itself is a
         # narrow Filter+Project over that checkpoint — NOT re-
         # checkpointed (r19): its three consumers re-evaluate the
         # trivial filter against deg's in-memory blocks, which A/B'd

@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from spark_ml_helper_spark.functions.canon import round_half_up
+from spark_ml_helper_spark.functions.literals import inline_rows, sql_literal
 from spark_ml_helper_spark.registry import query
 from spark_ml_helper_spark.sources.parquet import table
 
@@ -134,8 +135,8 @@ def ml_pca(spark, sf_dir):
     per_comp = scored.select(
         F.posexplode(F.col("pc")).alias("component", "score")
     ).groupBy("component").agg(F.var_samp("score").alias("score_var"))
-    ev_df = per_comp.sparkSession.createDataFrame(
-        [(i, v) for i, v in enumerate(ev)], "component int, explained_var double"
+    ev_df = spark.sql(
+        f"SELECT {inline_rows(list(enumerate(ev)), 'component int, explained_var double')}"
     )
     dims = (
         table(spark, sf_dir, "embeddings")
@@ -356,7 +357,9 @@ def ml_cross_validate(spark, sf_dir):
         )
         for i in range(len(grid))
     ]
-    return spark.createDataFrame(rows, "reg_param double, cv_accuracy double, is_best boolean")
+    return spark.sql(
+        f"SELECT {inline_rows(rows, 'reg_param double, cv_accuracy double, is_best boolean')}"
+    )
 
 
 @query(
@@ -1272,10 +1275,7 @@ def _logreg_gd_oracle() -> str:
     """
 
 
-@query(
-    "ml_logreg_gd", oracle=_logreg_gd_oracle(), family="ml",
-    bnlj="1-row metrics crossJoined onto the weight rows",
-)
+@query("ml_logreg_gd", oracle=_logreg_gd_oracle(), family="ml")
 def ml_logreg_gd(spark, sf_dir):
     """Binary logistic regression by BATCH GRADIENT DESCENT on all 64
     embedding dimensions (label>=5 as the positive class), built from
@@ -1352,10 +1352,8 @@ def ml_logreg_gd(spark, sf_dir):
             6,
         ).alias("log_loss"),
     )
-    weights = spark.createDataFrame(
-        [(d, wv) for d, wv in enumerate([b0] + warr)], "dim bigint, weight double"
-    )
-    return weights.crossJoin(F.broadcast(metrics))
+    weights = inline_rows(list(enumerate([b0] + warr)), "dim bigint, weight double")
+    return metrics.selectExpr(weights, "accuracy", "log_loss")
 
 
 _ALS_ROUNDS = 6
@@ -1835,10 +1833,7 @@ def _gmm_oracle() -> str:
     """
 
 
-@query(
-    "ml_gmm_em", oracle=_gmm_oracle(), family="ml",
-    bnlj="1-row log-likelihood crossJoined onto the parameter rows",
-)
+@query("ml_gmm_em", oracle=_gmm_oracle(), family="ml")
 def ml_gmm_em(spark, sf_dir):
     """Diagonal-covariance Gaussian-mixture EM (k=3 components over the
     first 4 embedding dims, 3 pinned rounds) built from engine
@@ -1859,7 +1854,12 @@ def ml_gmm_em(spark, sf_dir):
     restarts from bit-identical parameters; the Python-round
     half-even vs DuckDB half-away boundary hazard is measure-zero and
     declared (ml_logreg_gd documents the class). Variance floor 1e-4
-    (greatest/max on both sides). At 100 TB: rounds x one cached-scan
+    (greatest/max on both sides; both skip a NULL, so empty embeddings
+    give 12 rows with NULL weight/mu/loglik and sigma2 = 1e-4). Five
+    actions: the init aggregate (which also materializes the lazy
+    checkpoint), one per round, and the sink, where the 12 parameter
+    rows are SQL-text literals projected onto the 1-row log-likelihood
+    aggregate. At 100 TB: rounds x one cached-scan
     with a 27-value treeAggregate — identical cost shape to MLlib's
     own EM; the driver state is O(k*d) scalars per round."""
     e = table(spark, sf_dir, "embeddings")
@@ -1869,26 +1869,29 @@ def ml_gmm_em(spark, sf_dir):
     # projection: a Column-API call costs ~4x the py4j round-trips of
     # F.expr, and the 27 aggregates x 3 rounds made this loop
     # py4j-bound (OPERATING.md, loop bodies)
+    # lazy: the init aggregate below is the action that materializes it
     pts = e.selectExpr(
         "vec_id", *[f"CAST(element_at(embedding, {d}) AS DOUBLE) AS x{d}" for d in dims]
-    ).localCheckpoint()
-    var_row = pts.selectExpr(*[f"round(var_pop(x{d}), 8) AS v{d}" for d in dims]).collect()[0]
-    mu_rows = (
-        pts.groupBy(F.expr(f"vec_id % {K} AS g"))
-        .agg(*[F.expr(f"round(avg(x{d}), 8) AS m{d}") for d in dims])
-        .collect()
-    )
-    mu_by_g = {int(r["g"]): [r[f"m{d}"] for d in dims] for r in mu_rows}
+    ).localCheckpoint(eager=False)
+    # one aggregate for the shared variances and the per-group means
+    init = pts.selectExpr(
+        *[f"round(var_pop(x{d}), 8) AS v{d}" for d in dims],
+        *[
+            f"round(avg(CASE WHEN vec_id % {K} = {k} THEN x{d} END), 8) AS m{k}_{d}"
+            for k in range(K)
+            for d in dims
+        ],
+    ).collect()[0]
     wk = [0.33333333] * K
-    mu = [mu_by_g[k][:] for k in range(K)]
-    va = [[var_row[f"v{d}"] for d in dims] for k in range(K)]
+    mu = [[init[f"m{k}_{d}"] for d in dims] for k in range(K)]
+    va = [[init[f"v{d}"] for d in dims] for k in range(K)]
 
     def s_expr(k):
         return _gmm_s_skeleton(
             lambda d: f"x{d}",
-            lambda k=k: repr(wk[k]),
-            lambda d, k=k: repr(mu[k][d - 1]),
-            lambda d, k=k: repr(va[k][d - 1]),
+            lambda k=k: sql_literal(wk[k], "double"),
+            lambda d, k=k: sql_literal(mu[k][d - 1], "double"),
+            lambda d, k=k: sql_literal(va[k][d - 1], "double"),
         )
 
     def scored_pts():
@@ -1915,6 +1918,11 @@ def ml_gmm_em(spark, sf_dir):
             wk[k] = g[f"a_r{k}"]
             for d in dims:
                 a_r, a_rx, a_rxx = g[f"a_r{k}"], g[f"a_rx{k}_{d}"], g[f"a_rxx{k}_{d}"]
+                if None in (a_r, a_rx, a_rxx):
+                    # empty input: NULL averages give a NULL mean, and
+                    # greatest() skips the NULL variance, as in DuckDB
+                    mu[k][d - 1], va[k][d - 1] = None, _GMM_VFLOOR
+                    continue
                 mu[k][d - 1] = round_half_up(a_rx / a_r, 8)
                 va[k][d - 1] = max(
                     round_half_up(a_rxx / a_r - (a_rx / a_r) * (a_rx / a_r), 8),
@@ -1930,7 +1938,5 @@ def ml_gmm_em(spark, sf_dir):
         for k in range(K)
         for d in dims
     ]
-    out = spark.createDataFrame(
-        params, "component bigint, dim bigint, weight double, mu double, sigma2 double"
-    )
-    return out.crossJoin(F.broadcast(met))
+    ddl = "component bigint, dim bigint, weight double, mu double, sigma2 double"
+    return met.selectExpr(inline_rows(params, ddl), "loglik")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from spark_ml_helper_spark.functions.literals import inline_rows
 from spark_ml_helper_spark.functions.vector_math import dot, l2_norm
 from spark_ml_helper_spark.registry import query
 from spark_ml_helper_spark.sources.parquet import table
@@ -644,7 +645,7 @@ def pipeline_retrieval(spark, sf_dir):
     doc_norm = doc_dims.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("tf").cast("double") * F.col("tf"))).alias("nrm")
     )
-    qtok = spark.createDataFrame([("table",), ("scan",), ("merge",)], "w string")
+    qtok = spark.sql(f"SELECT {inline_rows([('table',), ('scan',), ('merge',)], 'w string')}")
     q_dims = qtok.groupBy(dim.alias("dim")).agg(F.count("*").alias("tf_q"))
     q_norm = q_dims.agg(
         F.sqrt(F.sum(F.col("tf_q").cast("double") * F.col("tf_q"))).alias("qn")

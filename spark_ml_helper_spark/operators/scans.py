@@ -12,6 +12,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from spark_ml_helper_spark.functions.literals import inline_rows
 from spark_ml_helper_spark.registry import query
 from spark_ml_helper_spark.session import staging_dir
 from spark_ml_helper_spark.sources.parquet import table
@@ -115,9 +116,9 @@ def scan_observed(spark, sf_dir):
     )
     observed.write.format("noop").mode("overwrite").save()  # the "real" action
     m = obs.get
-    return spark.createDataFrame(
-        [(m["n_rows"], m["sum_qty"], m["n_discounted"])],
-        "n_rows bigint, sum_qty double, n_discounted bigint",
+    row = (m["n_rows"], m["sum_qty"], m["n_discounted"])
+    return spark.sql(
+        f"SELECT {inline_rows([row], 'n_rows bigint, sum_qty double, n_discounted bigint')}"
     )
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from spark_ml_helper_spark.functions.canon import join_double_array
+from spark_ml_helper_spark.functions.literals import inline_rows
 from spark_ml_helper_spark.functions.vector_math import dot, l2_norm, sq_norm
 from spark_ml_helper_spark.registry import query
 from spark_ml_helper_spark.sources.parquet import table
@@ -2444,7 +2445,7 @@ def vec_kmeans_elbow(spark, sf_dir):
     space; at 100 TB sweep k on a sample first, exactly as MLlib's
     docs prescribe, with this plan unchanged."""
     e = table(spark, sf_dir, "embeddings")
-    cfgs = spark.createDataFrame([(k,) for k in _ELBOW_KS], "cfg int")
+    cfgs = spark.sql(f"SELECT {inline_rows([(k,) for k in _ELBOW_KS], 'cfg int')}")
     pts = e.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),

@@ -20,10 +20,6 @@ from pyspark.sql import SparkSession
 # session build AND defensively in load_tables() (the driver may hand us a
 # session we didn't build).
 RUNTIME_CONFS = {
-    # events.ts is parquet TIMESTAMP(NANOS) — Spark 4 refuses it by default;
-    # with this conf it surfaces as LongType nanos which we convert ourselves
-    # (SURVEY.md §7.4 hazard 1).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # All test timestamps are timezone-naive; pin the session to UTC so
     # ntz<->tz casts are identity w.r.t. the stored micros.
     "spark.sql.session.timeZone": "UTC",

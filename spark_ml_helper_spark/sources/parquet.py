@@ -1,55 +1,67 @@
 """Parquet sources: the ten driver-provided tables.
 
-Storage is self-describing parquet (schema from footers — no inference
-pass), read with the vectorized parquet reader; filters and column
-projections placed on these DataFrames push down to the scan (assert with
-``plans.explain_utils``).
+Every read declares its schema (``SCHEMAS``, FIXTURES.md is the spec), so
+``spark.read.schema(ddl).parquet(path)`` plans from the DDL and launches no
+job: an undeclared ``spark.read.parquet`` runs one schema-inference job per
+read (95-120 ms warm, even for the 5-row ``region``). The vectorized reader
+still checks each file's footer against the declared types, and filters
+and column projections placed on these DataFrames push down to the scan
+(assert with ``plans.explain_utils``). ``tests/test_pipeline.py`` pins each
+declared schema to the inferred one for every fixture copy, so fixture
+drift fails loudly.
 
-Special case: ``events.ts`` is parquet TIMESTAMP(NANOS, ntz) which Spark 4
-cannot read natively (FIXTURES.md "events"); with
-``spark.sql.legacy.parquet.nanosAsLong=true`` it arrives as LongType nanos
-and we floor-divide to micros — exactly what DuckDB's native nanos→micros
-read does — then cast to timestamp_ntz (session is pinned to UTC so the
-cast is identity on the stored value).
+``events.ts`` is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) in every
+fixture copy, read as TIMESTAMP_NTZ (the session is pinned to UTC).
 
 Scale note (100 TB): at the design target each "table" is a directory of
 many files, possibly partitioned; ``spark.read.parquet`` handles both
-identically. Nothing here collects to the driver; schema-only reads are
-footer metadata ops.
+identically, and a declared schema skips the inference pass that would
+otherwise list and sample the directory on every read. Nothing here
+collects to the driver.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from spark_ml_helper_spark.session import apply_runtime_confs
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, p_size int, "
+        "p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double, "
+        "o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+TABLES = list(SCHEMAS)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table, applying per-table ingestion fixes."""
+    """Read one table with its declared schema."""
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # nanos → micros floor division (integer `div`, NOT double `/`:
-        # nanos ~1.7e18 exceeds double's 2^53 integer range), then to NTZ.
-        df = df.withColumn(
-            "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
-        )
-    return df
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

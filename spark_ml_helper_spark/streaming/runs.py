@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from spark_ml_helper_spark.registry import query
 from spark_ml_helper_spark.session import staging_dir
-from spark_ml_helper_spark.sources.parquet import table
+from spark_ml_helper_spark.sources.parquet import SCHEMAS, table
 from spark_ml_helper_spark.streaming.batch_equiv import (
     SESSION_ORACLE,
     SLIDING_ORACLE,
@@ -148,13 +148,10 @@ def _events_stream(spark, sf_dir, path=None, max_files_per_trigger=None):
     behavior). maxFilesPerTrigger is a *source* option — it must be set on
     readStream (setting it on writeStream is silently ignored)."""
     path = path or _multifile_events(spark, sf_dir)
-    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    reader = spark.readStream.schema(SCHEMAS["events"])
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(path)
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
-    return raw
+    return reader.parquet(path)
 
 
 def _run(df, mode="complete", require_single_input_batch=False):

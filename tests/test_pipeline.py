@@ -1905,7 +1905,7 @@ def test_source_audit_pinned_inventory():
 
     assert counts["collect"] == {
         # O(k·d) moment rows / scalar reductions — bounded driver state
-        "operators/ml.py": 4,
+        "operators/ml.py": 3,
         # scalar max batch_id for incremental-run bookkeeping
         "streaming/runs.py": 1,
         # 100 tiny rows, fixture staging only (not a data path)
@@ -2200,11 +2200,128 @@ def test_loop_rows_structural_pin(spark, monkeypatch):
         return send(command, *args, **kwargs)
 
     client.send_command = counted
+    sc.setJobGroup("gmm_pin", "ml_gmm_em structural pin")
     try:
         QUERIES["ml_gmm_em"](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
     finally:
         del client.send_command
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(calls) < 1_000, len(calls)
+    # five actions (init aggregate, three rounds, sink) run 10 jobs; the
+    # parameter rows as a createDataFrame frame broadcast onto the
+    # log-likelihood, an eager checkpoint and a separate mean collect ran 15
+    jobs = sc.statusTracker().getJobIdsForGroup("gmm_pin")
+    assert len(jobs) <= 10, jobs
+
+
+def test_no_python_list_createDataFrame():
+    # spark.createDataFrame(<python list>, ddl) is sc.parallelize plus a
+    # PythonRDD: each action over it starts a Python worker task. Driver-
+    # held rows go through functions.literals.inline_rows (SQL text)
+    # instead. The one exempt call rebuilds a frame from a checkpointed
+    # RDD (fresh_stats_checkpoint's fallback), not from a Python list.
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(entry_mod.__file__).parent / "spark_ml_helper_spark"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                ):
+                    sites.append((str(path.relative_to(pkg)), fn.name))
+    assert sorted(set(sites)) == [("operators/graph.py", "fresh_stats_checkpoint")], sites
+
+
+def test_inline_rows_round_trip(spark):
+    # SQL-text rows come back bit-exact and typed, non-finite doubles,
+    # NULLs, quotes and backslashes included; no rows still has the schema
+    import math
+
+    from spark_ml_helper_spark.functions.literals import inline_rows
+
+    ddl = "i int, n bigint, x double, s string, b boolean"
+    rows = [
+        (1, 2**62, 0.1 + 0.2, "it's a \\ path", True),
+        (-3, None, math.inf, "", False),
+        (None, 0, -math.inf, None, None),
+        (0, -1, 5e-324, "x", True),
+    ]
+    df = spark.sql(f"SELECT {inline_rows(rows, ddl)}")
+    assert df.dtypes == [("i", "int"), ("n", "bigint"), ("x", "double"), ("s", "string"), ("b", "boolean")]
+    assert [tuple(r) for r in df.collect()] == rows
+    nan = spark.sql(f"SELECT {inline_rows([(math.nan,)], 'x double')}").collect()[0].x
+    assert math.isnan(nan)
+    empty = spark.sql(f"SELECT {inline_rows([], ddl)}")
+    assert empty.dtypes == df.dtypes and empty.collect() == []
+
+
+def test_declared_schemas_match_inferred(spark):
+    # every declared source schema equals what parquet inference yields,
+    # for each table present in every fixture copy
+    from spark_ml_helper_spark.sources.parquet import SCHEMAS, table
+
+    perf = os.path.join(os.path.dirname(entry_mod.__file__), "perfbench", "data", "sf0.1")
+    dirs = [SF_SMOKE, SF_ORACLE, os.path.join(os.path.dirname(SF_ORACLE), "sf0.1"), perf]
+    checked = 0
+    for sf in dirs:
+        for name in SCHEMAS:
+            path = f"{sf}/{name}.parquet"
+            if not os.path.exists(path):
+                continue
+            inferred = spark.read.parquet(path).schema
+            assert table(spark, sf, name).schema == inferred, (path, inferred.simpleString())
+            checked += 1
+    assert checked >= 35, checked  # 3 x 10 driver tables + perfbench's 5
+
+
+def test_table_read_launches_no_job(spark):
+    # with a declared schema, planning a read needs no inference job
+    from spark_ml_helper_spark.sources.parquet import TABLES, table
+
+    sc = spark.sparkContext
+    sc.setJobGroup("table_read_pin", "declared-schema reads")
+    try:
+        for name in TABLES:
+            table(spark, SF_SMOKE, name).columns
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("table_read_pin") == []
+
+
+def test_gmm_em_empty_embeddings(spark, tmp_path):
+    # degenerate input: with no embeddings every average is NULL, so the
+    # query returns the oracle's 12 parameter rows with NULL weight, mu
+    # and loglik and the floored sigma2 (greatest() skips NULLs)
+    import duckdb
+
+    from spark_ml_helper_spark.check import check_one, duckdb_connect
+    from spark_ml_helper_spark.sources.parquet import TABLES
+
+    for name in TABLES:
+        src = os.path.join(SF_SMOKE, f"{name}.parquet")
+        if name == "embeddings":
+            duckdb.sql(
+                f"COPY (SELECT * FROM read_parquet('{src}') LIMIT 0) "
+                f"TO '{tmp_path / 'embeddings.parquet'}' (FORMAT PARQUET)"
+            )
+        else:
+            os.symlink(src, tmp_path / f"{name}.parquet")
+    rows = QUERIES["ml_gmm_em"](spark, str(tmp_path)).collect()
+    assert len(rows) == 12
+    for r in rows:
+        assert (r.weight, r.mu, r.loglik) == (None, None, None), r
+        assert r.sigma2 == 1e-4, r
+    con = duckdb_connect(str(tmp_path))
+    status, detail = check_one(spark, con, "ml_gmm_em", str(tmp_path), verbose=False)
+    assert status == "PASS", detail
 
 
 def test_daily_kpis_internally_consistent(spark):
