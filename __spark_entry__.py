@@ -28,14 +28,18 @@ load_all_operators()
 # verification window (~50 queries, taken from the head of ``queries()``)
 # re-records them.
 #
-# Head: the ten queries whose driver-held rows became SQL-text literals
-# instead of createDataFrame frames (ml_gmm_em also takes its init
-# statistics in one aggregate and returns the oracle's rows on empty
-# embeddings). Then graph_coreness, now one delta h-index fixpoint instead
-# of a per-level peel loop, and ml_gmm_em's SQL-text EM rounds. Then graph_cc, whose edge list now comes
-# from the shared _cooccur_edges builder, and graph_pagerank, which now
-# returns an empty frame on empty events instead of raising. Then the
-# queries whose code paths lost a probe-only
+# Head: the queries whose code path changed with the one-implementation
+# refactor — graph_kcore (now the h-index fixpoint capped at k=3),
+# graph_coreness (the same fixpoint's state), every query built on the
+# shared customer-supplier co-occurrence builder (the _cooccur_edges users,
+# graph_cc_largestar, the SSSP twins, graph_mst, graph_link_prediction) and
+# every query trained by the shared seeded-Lloyd helper (the k-means, PQ and
+# IVF-PQ queries and vec_kmeans_elbow). Then the ten queries whose
+# driver-held rows became SQL-text literals instead of createDataFrame
+# frames (ml_gmm_em also takes its init statistics in one aggregate and
+# returns the oracle's rows on empty embeddings), ml_gmm_em's SQL-text EM
+# rounds, and graph_pagerank, which returns an empty frame on empty events
+# instead of raising. Then the queries whose code paths lost a probe-only
 # option or gained a shared helper — Borůvka without its prune/edge-count
 # switches, the SSSP relax-merge shared with Δ-stepping, the set-similarity
 # kernels without n_blocks, and round_half_up's isfinite guard (ml_gmm_em).
@@ -45,34 +49,40 @@ load_all_operators()
 # per-round training checkpoints); the stalest-first tail then drains the
 # oldest record ring.
 _REVERIFY_FIRST: list[str] = [
+    "graph_kcore",
+    "graph_coreness",
+    "graph_cc",
+    "graph_label_prop",
+    "graph_modularity",
+    "graph_louvain",
+    "graph_louvain_multilevel",
+    "graph_bfs_layers",
+    "graph_cc_largestar",
+    "graph_sssp_weighted",
+    "graph_sssp_delta",
+    "graph_mst",
+    "graph_link_prediction",
+    "vec_kmeans_lloyd",
+    "dedup_semantic",
+    "vec_pq_encode",
+    "sim_pq_adc",
+    "pipeline_pq_retrieval",
+    "sim_ann_ivfpq",
+    "vec_kmeans_elbow",
     "ml_gmm_em",
     "ml_logreg_gd",
     "ml_pca",
     "ml_cross_validate",
-    "vec_kmeans_elbow",
     "scan_observed",
     "text_sentiment",
     "tokenizer_bpe_train",
     "text_heaps_law",
     "pipeline_retrieval",
-    "graph_coreness",
-    "graph_cc",
     "graph_pagerank",
-    "graph_mst",
-    "graph_sssp_weighted",
-    "graph_sssp_delta",
     "dedup_containment",
     "dedup_ngram",
-    "graph_kcore",
     "pipeline_pretrain_report",
     "dedup_incremental",
-    "vec_kmeans_lloyd",
-    "vec_kmeans_elbow",
-    "dedup_semantic",
-    "vec_pq_encode",
-    "sim_pq_adc",
-    "sim_ann_ivfpq",
-    "pipeline_pq_retrieval",
     "vec_pca_power",
     "vec_pca_deflate",
 ]

@@ -1,8 +1,7 @@
 """Command-line entry point: run any registry query like a user would.
 
 Installed as the ``smh-run`` console script (pyproject.toml); also
-runnable as ``python -m spark_ml_helper_spark.cli`` or via the
-``python -m tools.run_query`` shim kept for existing docs/scripts.
+runnable as ``python -m spark_ml_helper_spark.cli``.
 
     smh-run <name> [--sf-dir DIR] [--out PATH]
                    [--format parquet|csv|json] [--show N]

@@ -504,7 +504,7 @@ def sim_ann_ivf(spark, sf_dir):
     # codebook: per-label mean, rounded — deterministic across engines.
     # Posexplode → (label, pos) partial agg on purpose (r18 measured: the
     # 64-wide single-aggregate variant regressed wall ~0.7 s from
-    # whole-stage codegen compile at that width; see _km_train's note).
+    # whole-stage codegen compile at that width; see _seeded_lloyd's note).
     ex = e.select("label", F.posexplode("embedding").alias("pos0", "v"))
     cent = (
         ex.groupBy(F.col("label").alias("c_label"), (F.col("pos0") + 1).alias("pos"))

@@ -1694,18 +1694,13 @@ _KM_K = 8
 _KM_ROUNDS = 5
 
 
-def _km_chain() -> str:
-    """Shared oracle prefix for the seeded-Lloyd family (vec_kmeans_lloyd,
-    dedup_semantic): CTEs ``pts`` (vec_id, embedding), ``c0``..``c{R}``
-    (the trained centroids, final under alias ``ckm``) and ``kmf``
-    (vec_id, cluster, dist — the final assignment). Generated SQL
-    mirrors the Spark rounds term for term. The 64-term squared-distance
-    sum is emitted LEFT-ASSOCIATED, which is the same IEEE evaluation
-    order as Spark's F.aggregate fold ((0+t1)+t2)+..., so the
-    per-(point, centroid) distance is bit-identical across engines and
-    the argmin assignment cannot diverge. Every CTE is MATERIALIZED
-    (DuckDB otherwise inlines the chained rounds — the same exponential
-    re-evaluation _pca_oracle hit)."""
+def _km_sql():
+    """SQL fragments of the 64-dim seeded-Lloyd oracle chains
+    (``_km_chain``, ``_kmeans_elbow_oracle``): ``(dist, seed_cols,
+    upd_cols, merge_cols)``, where ``dist(c_alias)`` is the
+    left-associated squared distance from ``p.embedding`` to centroid
+    ``c_alias``, seeds and updates emit ``d1..d64`` (updates re-rounded
+    at 7 dp) and merges keep the previous centroid of an empty cluster."""
     dims = list(range(1, 65))
 
     def dist(c_alias: str) -> str:
@@ -1722,7 +1717,22 @@ def _km_chain() -> str:
         f"round(avg(CAST(embedding[{d}] AS DOUBLE)), 7) AS d{d}" for d in dims
     )
     merge_cols = ", ".join(f"coalesce(u.d{d}, p.d{d}) AS d{d}" for d in dims)
+    return dist, seed_cols, upd_cols, merge_cols
 
+
+def _km_chain() -> str:
+    """Shared oracle prefix for the seeded-Lloyd family (vec_kmeans_lloyd,
+    dedup_semantic): CTEs ``pts`` (vec_id, embedding), ``c0``..``c{R}``
+    (the trained centroids, final under alias ``ckm``) and ``kmf``
+    (vec_id, cluster, dist — the final assignment). Generated SQL
+    mirrors the Spark rounds term for term. The 64-term squared-distance
+    sum is emitted LEFT-ASSOCIATED, which is the same IEEE evaluation
+    order as Spark's F.aggregate fold ((0+t1)+t2)+..., so the
+    per-(point, centroid) distance is bit-identical across engines and
+    the argmin assignment cannot diverge. Every CTE is MATERIALIZED
+    (DuckDB otherwise inlines the chained rounds — the same exponential
+    re-evaluation _pca_oracle hit)."""
+    dist, seed_cols, upd_cols, merge_cols = _km_sql()
     rounds = []
     prev = "c0"
     for r in range(1, _KM_ROUNDS + 1):
@@ -1783,6 +1793,94 @@ def _kmeans_oracle() -> str:
     """
 
 
+def _seeded_lloyd(pts, cent, keys, vec, width, rounds):
+    """Seeded Lloyd k-means, one model per ``keys`` group: ``()`` trains
+    one model (``_km_train``), ``("sub",)`` one codebook per PQ subspace
+    (``_pq_train``) and ``("cfg",)`` one model per elbow config
+    (``vec_kmeans_elbow``) — all groups in the same plan, one corpus
+    scan per round. ``pts`` carries ``keys`` and the ``width``-wide
+    double array ``vec``; ``cent`` holds the seed centroids ``(*keys,
+    cluster, cent)``. Runs ``rounds`` rounds and returns ``(cent,
+    final)``: the trained centroids and ``pts`` with each row's nearest
+    ``cluster`` and squared distance ``dist`` against them. Term for
+    term the oracles' chains: centroids are per-dimension means
+    re-rounded at 7 dp, and an empty cluster keeps its centroid."""
+    keys = list(keys)
+    grp = [*keys, "cluster"]
+    # Assignment is MAP-SIDE (round-7): each group's codebook rides as
+    # one broadcast row of (cluster, cent) structs and each point takes
+    # array_min over its (dist, cluster) structs — no points×k row
+    # explosion, no per-round row_number window shuffle. array_min's
+    # lexicographic (dist, cluster) min is bit-identical to the
+    # oracles' ORDER BY dist, cluster rn=1 (same left-associated fold).
+    amin = F.expr(
+        "array_min(transform(cands, c -> struct("
+        f"aggregate(zip_with({vec}, c.cent, (x, cc) -> (x - cc) * (x - cc)), "
+        "0D, (a, v) -> a + v) AS dist, c.cluster AS cluster)))"
+    )
+
+    def assign(cent_df):
+        cands = F.broadcast(
+            cent_df.groupBy(*keys).agg(
+                F.array_sort(F.collect_list(F.struct("cluster", "cent"))).alias("cands")
+            )
+        )
+        return (
+            (pts.join(cands, keys) if keys else pts.crossJoin(cands))
+            .withColumn("m", amin)
+            .select(
+                *pts.columns,
+                F.col("m.cluster").alias("cluster"),
+                F.col("m.dist").alias("dist"),
+            )
+        )
+
+    # The update form follows the width (r18 measured both forms; see
+    # OPTIMIZATION_r18.md). At 8 dims ONE aggregate of per-dimension avgs
+    # reassembled with F.array wins: the posexplode form multiplied the
+    # row stream 8x into a (…, dim) shuffle and needed a second shuffle
+    # to collect dims back into arrays. At 64 dims that aggregate
+    # regressed wall time ~0.6 s/query (64 agg buffers × rounds of
+    # whole-stage codegen compilation), so the wide form stays the
+    # posexplode → (…, cluster, dim) partial aggregate. Shuffle volume is
+    # identical either way: the explode is pre-combine, so each map
+    # partition emits k × width partial cells in both forms.
+    if width <= 8:
+        upd_aggs = [F.round(F.avg(F.col(vec)[d]), 7).alias(f"v{d}") for d in range(width)]
+        newc = F.array(*[F.col(f"v{d}") for d in range(width)]).alias("newc")
+
+        def update(assigned):
+            return assigned.groupBy(*grp).agg(*upd_aggs).select(*grp, newc)
+    else:
+        def update(assigned):
+            return (
+                assigned.select(*grp, F.posexplode(vec).alias("dim", "x"))
+                .groupBy(*grp, "dim")
+                .agg(F.round(F.avg("x"), 7).alias("v"))
+                .groupBy(*grp)
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("dim", "v"))),
+                        lambda s: s["v"],
+                    ).alias("newc")
+                )
+            )
+
+    for _ in range(rounds):
+        cent = (
+            cent.join(update(assign(cent)), grp, "left")
+            .select(*grp, F.coalesce("newc", "cent").alias("cent"))
+            # lazy (r19, the graph-family job-consolidation lesson): the
+            # NEXT round's centroid broadcast build scans this frame and
+            # materializes it inside its own job — one driver job per
+            # training round instead of two (eager checkpoint + broadcast
+            # build). Values unchanged: the checkpoint is still
+            # materialized exactly once, first touch.
+            .localCheckpoint(eager=False)
+        )
+    return cent, assign(cent)
+
+
 def _km_train(spark, sf_dir):
     """Spark half of the shared seeded-Lloyd chain (the ``_km_chain``
     oracle prefix): returns (pts, cent, final) where pts = (vec_id,
@@ -1799,68 +1897,8 @@ def _km_train(spark, sf_dir):
     cent = pts.where(F.col("vec_id") < _KM_K).select(
         F.col("vec_id").alias("cluster"), F.col("emb").alias("cent")
     )
-
-    # Assignment is MAP-SIDE (round-7): the k-centroid codebook rides in
-    # one broadcast row of (cluster, cent) structs and each point takes
-    # array_min over its (dist, cluster) structs — no points×k row
-    # explosion, no per-round row_number window shuffle. array_min's
-    # lexicographic (dist, cluster) min is bit-identical to the window's
-    # ORDER BY dist, cluster rn=1 (same left-associated fold).
-    amin = F.expr(
-        "array_min(transform(cands, c -> struct("
-        "aggregate(zip_with(emb, c.cent, (x, cc) -> (x - cc) * (x - cc)), "
-        "0D, (a, v) -> a + v) AS dist, c.cluster AS cluster)))"
-    )
-
-    def assign(cent_df):
-        cands = cent_df.agg(
-            F.array_sort(F.collect_list(F.struct("cluster", "cent"))).alias("cands")
-        )
-        return (
-            pts.crossJoin(F.broadcast(cands))
-            .withColumn("m", amin)
-            .select(
-                "vec_id",
-                "emb",
-                F.col("m.cluster").alias("cluster"),
-                F.col("m.dist").alias("dist"),
-            )
-        )
-
-    # Update stays the posexplode → (cluster, dim) partial-agg form ON
-    # PURPOSE (r18 measured): a single 64-wide avg aggregate halves the
-    # exchanges on paper but regressed wall time ~0.5 s/query (64 agg
-    # buffers × 5 rounds of whole-stage codegen compilation dominates at
-    # this width — the 8-wide PQ variant in _pq_train DID win and keeps
-    # the one-aggregate form). Shuffle volume is identical either way:
-    # the explode is pre-combine, so each map partition emits k×64
-    # partial cells in both forms.
-    for _ in range(_KM_ROUNDS):
-        assigned = assign(cent)
-        upd = (
-            assigned.select("cluster", F.posexplode("emb").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.round(F.avg("x"), 7).alias("v"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "v"))),
-                    lambda s: s["v"],
-                ).alias("newc")
-            )
-        )
-        cent = (
-            cent.join(upd, "cluster", "left")
-            .select("cluster", F.coalesce("newc", "cent").alias("cent"))
-            # lazy (r19, the graph-family job-consolidation lesson): the
-            # NEXT round's centroid broadcast build scans this frame and
-            # materializes it inside its own job — one driver job per
-            # training round instead of two (eager checkpoint + broadcast
-            # build). Values unchanged: the checkpoint is still
-            # materialized exactly once, first touch.
-            .localCheckpoint(eager=False)
-        )
-    return pts, cent, assign(cent)
+    cent, final = _seeded_lloyd(pts, cent, (), "emb", 64, _KM_ROUNDS)
+    return pts, cent, final
 
 
 @query(
@@ -2119,9 +2157,10 @@ def _pq_oracle() -> str:
 
 
 def _pq_train(spark, sf_dir):
-    """Spark half of the shared chain: returns (pts, final_assignment)
-    where pts = (vec_id, sub, sv: array<double>) and the assignment is
-    (vec_id, sub, cluster, dist) from the trained codebooks."""
+    """Spark half of the shared chain: returns (pts, cent, final) where
+    pts = (vec_id, sub, sv: array<double>), cent = the trained (sub,
+    cluster, cent) codebooks and final = (vec_id, sub, cluster, dist),
+    the assignment against them."""
     e = table(spark, sf_dir, "embeddings")
     pts = (
         e.select(
@@ -2142,69 +2181,8 @@ def _pq_train(spark, sf_dir):
     cent = pts.where(F.col("vec_id") < _PQ_K).select(
         "sub", F.col("vec_id").alias("cluster"), F.col("sv").alias("cent")
     )
-
-    # Assignment is MAP-SIDE (round-7): the per-subspace codebook rides
-    # as an array of (cluster, cent) structs behind an 8-row broadcast
-    # equi-join on sub, and each point takes array_min over its
-    # (dist, cluster) structs — replacing a points×k row explosion +
-    # row_number window whose per-round shuffle was the plan's dominant
-    # stage at the 100× probe decade. array_min's lexicographic
-    # (dist, cluster) min is bit-identical to the window's
-    # ORDER BY dist, cluster rn=1 (same left-associated distance fold).
-    amin = F.expr(
-        "array_min(transform(cands, c -> struct("
-        "aggregate(zip_with(sv, c.cent, (x, cc) -> (x - cc) * (x - cc)), "
-        "0D, (a, v) -> a + v) AS dist, c.cluster AS cluster)))"
-    )
-
-    def assign(cent_df):
-        cands = cent_df.groupBy("sub").agg(
-            F.array_sort(F.collect_list(F.struct("cluster", "cent"))).alias("cands")
-        )
-        return (
-            pts.join(F.broadcast(cands), "sub")
-            .withColumn("m", amin)
-            .select(
-                "vec_id",
-                "sub",
-                "sv",
-                F.col("m.cluster").alias("cluster"),
-                F.col("m.dist").alias("dist"),
-            )
-        )
-
-    # Codebook update as ONE (sub, cluster)-keyed aggregate of 8
-    # per-dimension avg expressions reassembled with F.array (r18, the
-    # _km_train recipe): the posexplode form multiplied the subvector
-    # stream 8x into a (sub, cluster, dim) shuffle and needed a second
-    # shuffle to collect dims back into arrays. Same aggregates over the
-    # same rows, re-rounded at 7 dp (the drift absorber) — centroids
-    # unchanged, re-verified against the DuckDB chain.
-    upd_aggs = [
-        F.round(F.avg(F.col("sv")[d]), 7).alias(f"v{d}") for d in range(_PQ_SUBDIM)
-    ]
-    for _ in range(_PQ_ROUNDS):
-        assigned = assign(cent)
-        upd = (
-            assigned.groupBy("sub", "cluster")
-            .agg(*upd_aggs)
-            .select(
-                "sub",
-                "cluster",
-                F.array(*[F.col(f"v{d}") for d in range(_PQ_SUBDIM)]).alias("newc"),
-            )
-        )
-        cent = (
-            cent.join(upd, ["sub", "cluster"], "left")
-            .select(
-                "sub", "cluster", F.coalesce("newc", "cent").alias("cent")
-            )
-            # lazy (r19): next round's broadcast build materializes it —
-            # one job per training round instead of two (see _km_train)
-            .localCheckpoint(eager=False)
-        )
-    final = assign(cent).select("vec_id", "sub", "cluster", "dist")
-    return pts, cent, final
+    cent, final = _seeded_lloyd(pts, cent, ("sub",), "sv", _PQ_SUBDIM, _PQ_ROUNDS)
+    return pts, cent, final.select("vec_id", "sub", "cluster", "dist")
 
 
 @query(
@@ -2346,22 +2324,7 @@ def _kmeans_elbow_oracle() -> str:
     # grouped-training generalization vec_pq_encode uses across
     # subspaces). Distances stay the bit-identical left-associated
     # 64-term sums; centroid updates re-round at 7 dp per round.
-    dims = list(range(1, 65))
-
-    def dist(c_alias: str) -> str:
-        return " + ".join(
-            f"(CAST(p.embedding[{d}] AS DOUBLE) - {c_alias}.d{d})"
-            f" * (CAST(p.embedding[{d}] AS DOUBLE) - {c_alias}.d{d})"
-            for d in dims
-        )
-
-    seed_cols = ", ".join(
-        f"CAST(embedding[{d}] AS DOUBLE) AS d{d}" for d in dims
-    )
-    upd_cols = ", ".join(
-        f"round(avg(CAST(embedding[{d}] AS DOUBLE)), 7) AS d{d}" for d in dims
-    )
-    merge_cols = ", ".join(f"coalesce(u.d{d}, p.d{d}) AS d{d}" for d in dims)
+    dist, seed_cols, upd_cols, merge_cols = _km_sql()
     ks = ", ".join(f"({k})" for k in _ELBOW_KS)
 
     rounds = []
@@ -2458,55 +2421,7 @@ def vec_kmeans_elbow(spark, sf_dir):
         .join(F.broadcast(cfgs), F.col("vec_id") < F.col("cfg"))
         .select("cfg", F.col("vec_id").alias("cluster"), "cent")
     )
-    # Assignment is MAP-SIDE (round-7, the vec_kmeans_lloyd recipe keyed
-    # by cfg): each config's codebook rides as an array of (cluster,
-    # cent) structs behind a 4-row broadcast equi-join on cfg, and each
-    # (point, cfg) row takes array_min over its (dist, cluster) structs
-    # — bit-identical to the former ORDER BY dist, cluster window.
-    amin = F.expr(
-        "array_min(transform(cands, c -> struct("
-        "aggregate(zip_with(emb, c.cent, (x, cc) -> (x - cc) * (x - cc)), "
-        "0D, (a, v) -> a + v) AS dist, c.cluster AS cluster)))"
-    )
-
-    def assign(cent_df):
-        cands = cent_df.groupBy("cfg").agg(
-            F.array_sort(F.collect_list(F.struct("cluster", "cent"))).alias("cands")
-        )
-        return (
-            pts.join(F.broadcast(cands), "cfg")
-            .withColumn("m", amin)
-            .select(
-                "cfg",
-                "vec_id",
-                "emb",
-                F.col("m.cluster").alias("cluster"),
-                F.col("m.dist").alias("dist"),
-            )
-        )
-
-    for _ in range(_KM_ROUNDS):
-        assigned = assign(cent)
-        upd = (
-            assigned.select("cfg", "cluster", F.posexplode("emb").alias("dim", "x"))
-            .groupBy("cfg", "cluster", "dim")
-            .agg(F.round(F.avg("x"), 7).alias("v"))
-            .groupBy("cfg", "cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "v"))),
-                    lambda s: s["v"],
-                ).alias("newc")
-            )
-        )
-        cent = (
-            cent.join(upd, ["cfg", "cluster"], "left")
-            .select("cfg", "cluster", F.coalesce("newc", "cent").alias("cent"))
-            # lazy (r19): next round's broadcast build materializes it —
-            # one job per training round instead of two (see _km_train)
-            .localCheckpoint(eager=False)
-        )
-    final = assign(cent)
+    _, final = _seeded_lloyd(pts, cent, ("cfg",), "emb", 64, _KM_ROUNDS)
     curve = final.groupBy(F.col("cfg").cast("bigint").alias("k")).agg(
         F.round(F.avg("dist"), 6).alias("inertia")
     )
@@ -2764,7 +2679,7 @@ def train_ivfpq(spark, sf_dir):
     # Kept in the posexplode → (label, pos) partial-agg form on purpose
     # (r18 measured): the 64-wide single-aggregate variant regressed
     # wall ~0.7 s from whole-stage codegen compilation at that width
-    # (see _km_train; the 8-wide PQ form is the one that wins).
+    # (see _seeded_lloyd; the 8-wide PQ form is the one that wins).
     ex = e.select("label", F.posexplode("embedding").alias("pos0", "v"))
     ivfc = (
         ex.groupBy(F.col("label").alias("c_label"), (F.col("pos0") + 1).alias("pos"))

@@ -2213,13 +2213,22 @@ def test_loop_rows_structural_pin(spark, monkeypatch):
     jobs = sc.statusTracker().getJobIdsForGroup("gmm_pin")
     assert len(jobs) <= 10, jobs
 
+    # graph_kcore reads the k-core off the same h-index fixpoint capped
+    # at k; the separate delta peel it replaced ran 35 jobs here
+    sc.setJobGroup("kcore_pin", "graph_kcore structural pin")
+    try:
+        QUERIES["graph_kcore"](spark, SF_ORACLE).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("kcore_pin")
+    assert len(jobs) <= 20, jobs
+
 
 def test_no_python_list_createDataFrame():
     # spark.createDataFrame(<python list>, ddl) is sc.parallelize plus a
     # PythonRDD: each action over it starts a Python worker task. Driver-
     # held rows go through functions.literals.inline_rows (SQL text)
-    # instead. The one exempt call rebuilds a frame from a checkpointed
-    # RDD (fresh_stats_checkpoint's fallback), not from a Python list.
+    # instead.
     import ast
     import pathlib
 
@@ -2237,7 +2246,7 @@ def test_no_python_list_createDataFrame():
                     and node.func.attr == "createDataFrame"
                 ):
                     sites.append((str(path.relative_to(pkg)), fn.name))
-    assert sorted(set(sites)) == [("operators/graph.py", "fresh_stats_checkpoint")], sites
+    assert sites == [], sites
 
 
 def test_inline_rows_round_trip(spark):
@@ -4782,38 +4791,6 @@ def test_fresh_stats_checkpoint_bounds_estimate_growth(spark):
     assert sorted(r.k for r in fresh.collect()) == list(range(10))
 
 
-def test_fresh_stats_checkpoint_fallback_without_internal_api(spark, monkeypatch):
-    # Verdict r15 item 3: fresh_stats_checkpoint's fast path is the
-    # tree's only private[sql] dependency. A Spark upgrade that drops
-    # SparkSession.internalCreateDataFrame must NOT strand the
-    # Borůvka/min-label fixpoints — the public-API fallback
-    # (createDataFrame over the checkpointed RDD) must deliver the same
-    # two properties: bounded stats digits under self-referential join
-    # compounding, and identical data. Force the fallback branch by
-    # monkeypatching the capability probe.
-    from pyspark.sql import functions as F
-
-    from spark_ml_helper_spark.operators import graph as G
-
-    monkeypatch.setattr(G, "_has_internal_create", lambda jss: False)
-
-    def digits(df):
-        return len(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-
-    base = spark.range(10).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    fresh = G.fresh_stats_checkpoint(base)
-    for _ in range(7):
-        fresh = G.fresh_stats_checkpoint(
-            fresh.join(
-                fresh.select(F.col("k"), F.col("v").alias("v2")), "k"
-            ).select("k", F.least("v", "v2").alias("v"))
-        )
-    assert digits(fresh) < 25, digits(fresh)
-    assert sorted(r.k for r in fresh.collect()) == list(range(10))
-
-
 def test_shuffle_ledger_parsers():
     # tools/shuffle_ledger: the three SQLMetrics string forms — plain
     # count with separators, simple size, and the multi-line
@@ -4915,7 +4892,7 @@ def test_bnlj_build_side_is_tiny_at_runtime(spark):
 
 # ---------------------------------------------------------------------------
 # README worked examples — executed, not just proofread (VERDICT r16 item 4).
-# Extracts every `python -m tools.run_query ...` / `smh-run ...` invocation
+# Extracts every `python -m spark_ml_helper_spark.cli ...` / `smh-run ...` invocation
 # from README.md plus each per-family table's `Try` name, and executes them
 # at sf0.001 through the real CLI entry point (spark_ml_helper_spark.cli),
 # so a renamed query or dropped flag rots the docs loudly. Names + flags
@@ -4939,7 +4916,7 @@ def _readme_example_invocations():
 
     for line in text.splitlines():
         code = line.split("  #", 1)[0].strip()
-        m = re.match(r"(?:python -m tools\.run_query|smh-run)\s+(\S.*)$", code)
+        m = re.match(r"(?:python -m spark_ml_helper_spark\.cli|smh-run)\s+(\S.*)$", code)
         if m:
             add(shlex.split(m.group(1)))
     # the "One representative query per family" table: | family | `name` | … |

@@ -858,10 +858,13 @@ def _coreness_shape(shape, n, seed):
 @example(shape="cliques", n=14, kmax=6, seed=3)
 def test_spark_coreness_matches_python_peel(spark, shape, n, kmax, seed):
     # the delta h-index fixpoint (Spark) against whole-set peeling per
-    # level (Python), on the shared session: few examples, tiny graphs
+    # level (Python), on the shared session: few examples, tiny graphs.
+    # Its converged state answers both graph_coreness (est) and
+    # graph_kcore (the nodes at est = kmax, with c_kmax their degree
+    # inside the kmax-core)
     from collections import defaultdict
 
-    from spark_ml_helper_spark.operators.graph import coreness_decomposition
+    from spark_ml_helper_spark.operators.graph import hindex_fixpoint
 
     adj = defaultdict(set)
     for a, b in _coreness_shape(shape, n, seed):
@@ -871,8 +874,13 @@ def test_spark_coreness_matches_python_peel(spark, shape, n, kmax, seed):
     # checkpointed, like every caller's edge frame: a bare local list
     # is a Python RDD that every round would re-scan through a worker
     edges = spark.createDataFrame(rows, "src bigint, dst bigint").localCheckpoint()
-    got = {r["node"]: r["coreness"] for r in coreness_decomposition(edges, kmax).collect()}
-    assert got == _capped_coreness(adj, kmax), (shape, sorted(got.items()))
+    state = hindex_fixpoint(edges, kmax).collect()
+    want = _capped_coreness(adj, kmax)
+    got = {r["node"]: r["est"] for r in state}
+    assert got == want, (shape, sorted(got.items()))
+    core = {v for v, c in want.items() if c == kmax}
+    got_core = {r["node"]: r[f"c{kmax}"] for r in state if r["est"] == kmax}
+    assert got_core == {v: len(adj[v] & core) for v in core}, (shape, sorted(got_core.items()))
 
 
 @settings(max_examples=30, deadline=None)
